@@ -4,6 +4,9 @@ Usage: python bench.py
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default all cores).
 
+Runs at the same posture as a driver's session (``get_session`` +
+``tune``): it sets no environment variable and has no warm-up.
+
 Each query is executed fully (noop sink — JVM-side, no driver collect)
 and timed; output: {"metric": "headline_total", "value": <sec>,
 "unit": "sec", "queries": {name: sec}, "sf": <sf>}.
@@ -108,138 +111,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    # Streaming replay fast path, BENCH-ONLY (VERDICT r5 item 6): shrink
-    # the per-micro-batch RocksDB state-store count (the documented ~95%
-    # fixed tax of the bounded replay — see SCALE.md §Streaming and
-    # streaming/runner.py). Results are partitioning-independent
-    # (measured identical, 9.4 s → 3.6 s warm); correctness surfaces
-    # (driver runs, pytest, K=100 stress) never set this and keep full
-    # state parallelism + file-sized batches.
-    os.environ.setdefault("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    # Companion bench-only fast path (r12): in-heap state store for the
-    # bounded replays — per-store RocksDB open/commit was ~30-40% of
-    # the stateful replays at sf0.1; backend choice cannot change
-    # results (see streaming/runner.py). Correctness surfaces never set
-    # this and keep the RocksDB 100 TB default.
-    os.environ.setdefault("SPARK_GRAFT_STREAM_STATE_PROVIDER", "hdfs")
-    # Scan split open-cost pad, BENCH-ONLY (r13, VERDICT r12 item 2):
-    # the CODE default is Spark's scale-safe 4 MB; the bench opts into
-    # 64 KB so a small page-cached parquet file splits to the core
-    # count instead of 1-3 scan tasks. Proven ≥ neutral per query by
-    # the r13 interleaved same-session A/B (plans/r13/scanfloor_ab.json)
-    # and identical to the effective r12 bench configuration, so
-    # round-over-round comparability is preserved.
-    os.environ.setdefault("SPARK_GRAFT_OPEN_COST", str(64 * 1024))
-    # Streaming spool + temp checkpoints on tmpfs, BENCH-ONLY (r13,
-    # VERDICT r12 item 6): the bounded replays' fixed floor includes
-    # the foreachBatch parquet spool write/read-back and per-batch
-    # checkpoint commits — pure scratch I/O that a production cluster
-    # would put on fast local disks anyway. Results are byte-identical
-    # (same files, different mount). Correctness runs / pytest never
-    # set this and keep the regular tmpdir.
-    if os.path.isdir("/dev/shm") and "SPARK_GRAFT_SCRATCH_DIR" not in os.environ:
-        _scratch = "/dev/shm/p2bd_bench_scratch"
-        os.makedirs(_scratch, exist_ok=True)
-        os.environ["SPARK_GRAFT_SCRATCH_DIR"] = _scratch
     spark = get_session("p2bd-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm-up: absorb one-time JVM/codegen/broadcast machinery costs so
-    # per-query timings are steady-state and comparable round-over-round.
-    # Deliberately NOT a headline query — a tiny synthetic plan that
-    # touches the same executor paths (scan, broadcast join, hash agg,
-    # window, noop write) on the smallest tables.
-    from pyspark.sql import functions as _F
-    from pyspark.sql.window import Window as _W
-
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    warm = (
-        nation.join(_F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(_F.count("*").alias("n"),
-             _F.sum(_F.col("n_nationkey").cast("decimal(18,2)")).alias("s"))
-        .withColumn("rn", _F.row_number().over(_W.orderBy("r_name")))
-    )
-    warm.write.mode("overwrite").format("noop").save()
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    # page-cache + footer warm for the OTHER big inputs too (r12: the
-    # remaining first-rep outliers were exactly the documents-table
-    # queries — dedup_exact rep1 1.39 s vs 0.17 s min — because only
-    # lineitem was warmed)
-    spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    spark.read.parquet(f"{sf_dir}/orders.parquet").count()
-
-    # Python-worker warm-up: spawn the per-core pyspark daemon workers
-    # and pay the pandas/numpy import ONCE here, so the first Arrow-UDF
-    # query in the run isn't charged the fleet's cold start (observed
-    # ~13-25 s for 32 workers on a cold page cache vs <1 s warm). On a
-    # real cluster workers are long-lived; charging spawn cost to one
-    # arbitrary query would misrank it round-over-round.
-    from pyspark.sql.types import LongType as _Long
-
-    @_F.pandas_udf(_Long())
-    def _warm_udf(s):
-        return s.str.len().astype("int64")
-
-    (spark.range(0, spark.sparkContext.defaultParallelism * 4, 1,
-                 spark.sparkContext.defaultParallelism)
-     .select(_warm_udf(_F.col("id").cast("string")).alias("n"))
-     .write.mode("overwrite").format("noop").save())
-
-    # Shared-fixture warm-up (VERDICT r10 What's-wrong #2): the
-    # session-cached mongoexport file and the SCD1-deletes dimension
-    # are built lazily inside the FIRST query that needs them, so that
-    # query's first timed rep was charging ~4 s of fixture build to the
-    # connector (r10 tertiary pair [4.979, 0.644]). Build both here so
-    # every timed rep measures the operator, not the fixture.
-    from project2_bigdata_spark.sources.ingest import (  # noqa: E402
-        _scd1_deletes_table, shared_mongoexport,
-    )
-
-    shared_mongoexport(spark, sf_dir)
-    _scd1_deletes_table(spark, sf_dir)
-
-    # Python Data Source machinery warm-up: the fixture warm above did
-    # NOT fix the connector's first-rep cost (r11 pair still
-    # [4.498, 0.641]) — the ~4-5 s is the DataSource API's own cold
-    # start (plan-python process + source registration), measured 5.8 s
-    # on a 3-line file. Same argument as _warm_udf: on a long-lived
-    # cluster this is once-per-session machinery, and charging it to
-    # one arbitrary query misranks it round-over-round.
-    import tempfile as _tf
-
-    from project2_bigdata_spark.sources.pyds import (  # noqa: E402
-        read_jsonl_sales as _rjs,
-    )
-
-    _tiny = os.path.join(_tf.mkdtemp(prefix="pyds_warm_"), "tiny.jsonl")
-    with open(_tiny, "w") as _f:
-        _f.write('{"_id": {"$oid": "0"}, "saleDateRaw": '
-                 '"1997-01-01T00:00:00Z", "price": {"$numberDecimal": '
-                 '"1.00"}, "purchaseMethod": "X"}\n')
-    _rjs(spark, _tiny, num_partitions=1).count()
-    # … and the WRITE half plus the shared-export read path (r12,
-    # VERDICT r11 What's-wrong #3): the r11 warm-up fixed the
-    # once-per-session DataSource cold start but each connector HALF
-    # still paid its own first-plan cost inside its first timed rep
-    # (scan pair [2.48, 0.94], roundtrip [5.23, 1.93] in the recorded
-    # run). Drive one tiny write→read through write_jsonl_sales and
-    # one read of the shared export here, so every timed rep measures
-    # the operator.
-    from project2_bigdata_spark.sources.pyds import (  # noqa: E402
-        write_jsonl_sales as _wjs,
-    )
-
-    _wdir = os.path.join(_tf.mkdtemp(prefix="pyds_warm_w_"), "out")
-    os.makedirs(_wdir, exist_ok=True)
-    _wjs(_rjs(spark, _tiny, num_partitions=1), _wdir)
-    _rjs(spark, _wdir, num_partitions=1).count()
-    _rjs(spark, shared_mongoexport(spark, sf_dir), num_partitions=8) \
-        .limit(1).count()
-
+    # No warm-up: the bench runs exactly what a driver's session runs,
+    # cold start included. Rep 1 of each query carries it and stays on
+    # record (``queries_runs[name][0]``, ``first_rep_outliers``); the
+    # per-query MIN is the steady-state cost.
     # Repetitions: BENCH_HISTORY shows ~2x per-query swings under host
     # load on this shared VM (pair_counts 2.17-3.84s across identical
     # code); single-run timings made round-over-round deltas noise.
@@ -249,8 +127,8 @@ def main() -> None:
     # Secondary at 3 reps (was 2): min-of-2 could not separate host noise
     # from real sub-second regressions (VERDICT r3 item 1) — with
     # median-of-3 riding along, a >30% delta is attributable.
-    reps_headline = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    reps_secondary = int(os.environ.get("SPARK_GRAFT_BENCH_REPS_SECONDARY", "3"))
+    reps_headline = 3
+    reps_secondary = 3
 
     def run_set(names: list[str], reps: int):
         import statistics
@@ -274,16 +152,18 @@ def main() -> None:
         return mins, medians, runs
 
     # Machine-speed calibration: a fixed synthetic JVM workload (no I/O,
-    # no Python) timed best-of-2. Host load varies between rounds on a
-    # shared VM; dividing query times by (calibration / its historical
-    # value) separates engine regressions from machine noise.
+    # no Python) timed best-of-2, split across the session's own cores.
+    # Host load varies between rounds on a shared VM; dividing query
+    # times by (calibration / its historical value) separates engine
+    # regressions from machine noise.
     def _calibrate() -> float:
         from pyspark.sql import functions as _Fc
 
         best = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
-            (spark.range(0, 50_000_000, 1, 32)
+            (spark.range(0, 50_000_000, 1,
+                         spark.sparkContext.defaultParallelism)
              .select((_Fc.col("id") % 97).alias("k"), _Fc.col("id").alias("v"))
              .groupBy("k").agg(_Fc.sum("v"), _Fc.count("*"))
              .write.mode("overwrite").format("noop").save())
@@ -321,14 +201,11 @@ def main() -> None:
     # 29.4s purely because a single tertiary run caught a noisy host
     # moment (the round's three other runs read 10.1-11.4s). One repeat
     # is the cheapest protocol that discards one bad observation per
-    # query. Disable with SPARK_GRAFT_BENCH_TERTIARY=0.
-    tertiary: dict[str, float] = {}
-    tertiary_runs: dict[str, list[float]] = {}
-    reps_tertiary = int(os.environ.get("SPARK_GRAFT_BENCH_REPS_TERTIARY", "2"))
-    if os.environ.get("SPARK_GRAFT_BENCH_TERTIARY", "1") != "0":
-        covered = set(HEADLINE) | set(SECONDARY)
-        rest = [n for n in REGISTRY if n not in covered]
-        tertiary, _, tertiary_runs = run_set(rest, reps_tertiary)
+    # query.
+    reps_tertiary = 2
+    covered = set(HEADLINE) | set(SECONDARY)
+    rest = [n for n in REGISTRY if n not in covered]
+    tertiary, _, tertiary_runs = run_set(rest, reps_tertiary)
 
     # One more probe AFTER the secondary+tertiary blocks: the headline
     # guard cannot see load arriving during those blocks (r8: the
@@ -379,18 +256,6 @@ def main() -> None:
     }
 
     total = round(sum(timings.values()), 3)
-    # Bench-env annotation (r13, VERDICT r12 What's-wrong #3): name the
-    # bench-only env posture in the record so stream timings stay
-    # interpretable round-over-round (r11 stream numbers are RocksDB,
-    # r12+ are in-heap; r13+ scratch rides tmpfs when available).
-    bench_env = {
-        "stream_state": os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_PROVIDER", "rocksdb"),
-        "stream_shuffle": os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", ""),
-        "open_cost": os.environ.get("SPARK_GRAFT_OPEN_COST", "default"),
-        "scratch": ("shm" if os.environ.get(
-            "SPARK_GRAFT_SCRATCH_DIR", "").startswith("/dev/shm") else "tmp"),
-    }
     result = {
         "metric": "headline_total",
         "value": total,
@@ -415,7 +280,6 @@ def main() -> None:
         "contention_rerun": contended,
         "first_rep_outliers": first_rep_outliers,
         "data_fingerprint": data_fp,
-        "bench_env": bench_env,
         "sf": sf,
     }
     print(json.dumps(result))
@@ -448,7 +312,6 @@ def main() -> None:
             first_rep_outliers.items(),
             key=lambda kv: -(kv[1][0] / min(kv[1])))[:3]),
         "data_fingerprint": data_fp,
-        "bench_env": bench_env,
     }
     # Enforce the <~1.2KB budget that keeps the line inside the driver's
     # ~2KB stdout tail (ADVICE r5) with HARD truncation, not assert:
@@ -459,9 +322,6 @@ def main() -> None:
     # final fallback is a minimal {metric,value,unit} line that always
     # fits. Full detail persists in BENCH_HISTORY.jsonl regardless.
     line = json.dumps(compact)
-    if len(line) >= 1200:
-        compact.pop("bench_env", None)
-        line = json.dumps(compact)
     if len(line) >= 1200:
         compact["queries"] = {"_dropped": "oversized; see BENCH_HISTORY.jsonl"}
         line = json.dumps(compact)

@@ -24,27 +24,49 @@ TABLES = (
 #: parallelizes on its own and the helper is a no-op.
 _SMALL_INPUT_BYTES = 64 << 20
 
-#: Parquet schema cache (r13, guide §5 "the driver is a bottleneck
-#: too"): every ``table()`` call used to run schema INFERENCE (a
-#: footer-listing pass on the driver) plus a py4j schema fetch for the
-#: NTZ check — measured as a visible slice of per-query DataFrame build
-#: time (the bench re-builds each query every rep, and a real workload
-#: re-plans per query too; a metastore-backed catalog serves schemas
-#: exactly like this). Keyed on (absolute path, size, mtime) so a
-#: driver testdata regen invalidates naturally. METADATA only — no
-#: rows, no results, nothing derived from query execution is cached.
-_SCHEMA_CACHE: dict[tuple, object] = {}
+#: Parquet schema memo for every scan the engine builds — batch
+#: (``table``) and streaming (``events_stream``, which needs an explicit
+#: schema). Without it every call pays a footer-listing inference pass
+#: plus a py4j schema fetch on the driver, a visible slice of per-query
+#: DataFrame build time. Keyed path → (stamp, schema); the stamp
+#: invalidates on testdata regen, and for a DIRECTORY table it is the
+#: (mtime, size) of every part file, not the directory inode's own
+#: stats — rewriting a part file in place need not touch the directory
+#: mtime. One entry per path keeps the memo bounded across regens.
+#: METADATA only — nothing derived from query execution is cached.
+_SCHEMA_MEMO: dict = {}
 
 
-def _parquet_schema(spark: SparkSession, path: str):
+def _source_stamp(path: str):
     try:
         st = os.stat(path)
-        key = (os.path.abspath(path), st.st_size, int(st.st_mtime_ns))
+        if os.path.isdir(path):
+            # Walk the WHOLE tree, not just top-level regular files: a
+            # partitioned/nested parquet layout keeps its part files in
+            # subdirectories, and an in-place rewrite there must
+            # invalidate the memo too (ADVICE r6 — same bug class as
+            # the r5 top-level fix, one level deeper). Entries are
+            # keyed by path relative to the source root so a rename is
+            # a stamp change as well.
+            parts = []
+            for root, _dirs, files in os.walk(path):
+                rel_root = os.path.relpath(root, path)
+                for fname in files:
+                    s = os.stat(os.path.join(root, fname))
+                    parts.append((os.path.join(rel_root, fname),
+                                  s.st_mtime_ns, s.st_size))
+            return tuple(sorted(parts)) or (st.st_mtime_ns, st.st_size)
+        return (st.st_mtime_ns, st.st_size)
     except OSError:
-        return spark.read.parquet(path).schema  # let Spark surface the error
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+        return None
+
+
+def _probe_schema(spark: SparkSession, path: str):
+    stamp = _source_stamp(path)
+    hit = _SCHEMA_MEMO.get(path)
+    if hit is None or hit[0] != stamp or stamp is None:
+        _SCHEMA_MEMO[path] = (stamp, spark.read.parquet(path).schema)
+    return _SCHEMA_MEMO[path][1]
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -54,9 +76,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
     tune(spark)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _parquet_schema(spark, path)
+    schema = _probe_schema(spark, path)
     # explicit schema: planning skips the per-call inference pass; the
-    # schema is the same one inference produced (cached above)
+    # schema is the same one inference produced (memoized above)
     df = spark.read.schema(schema).parquet(path)
     from pyspark.sql import functions as F
     from pyspark.sql import types as T

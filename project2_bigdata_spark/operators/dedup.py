@@ -350,38 +350,23 @@ def oracle_minhash_accuracy() -> str:
     """
 
 
-def _band_table(docs: DataFrame, occupancy: str | None = None) -> DataFrame:
+def _band_table(docs: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_hash, _bn) band table with per-bucket
     occupancy — the shared LSH index shape; consumers split it at a
     cap (``_capped_bands`` keeps <= cap for the pair join,
     ``minhash_hot_bucket_matches`` takes > cap for the linear
     representative pass).
 
-    ``occupancy`` picks how the per-bucket count is computed (default
-    ``window``, override via SPARK_GRAFT_BAND_OCCUPANCY or the
-    parameter — the measurement knob for ``tools/scale_stress.py
-    band_occupancy``):
-
-    * ``window`` — ``count(*) OVER (PARTITION BY band_idx, band_hash)``:
-      ONE exchange on the band key that ReuseExchange then feeds to the
-      pair join, at the cost of sorting each bucket inside a single
-      task (AQE cannot skew-split a window partition).
-    * ``groupby`` — groupBy + rejoin: the count collapses map-side (a
-      hot bucket costs one combiner cell, not a task-local sort) and
-      the rejoin is a skew-splittable SortMergeJoin, at the cost of a
-      second exchange.
-
-    MEASURED on the K=100 Zipf skew corpus (497k docs, one giant
-    near-dup family; SCALE.md §Band-occupancy): minhash_near_dup wall
-    10.9 s (window) vs 14.8 s (groupby), hot-bucket pass 6.2 s vs
-    10.6 s, results bit-identical — the embedding leg's ReuseExchange
-    argument (similarity.py:448) holds on the minhash leg too (VERDICT
-    r7 item 6): the window's single band-key exchange feeds the pair
-    join and the hot pass's representative window, where groupby+rejoin
-    pays a second exchange and an extra join. ``window`` stays the
-    default with the measurement on record; the giant family's sort
-    cost never dominates because a hot bucket's rows are already
-    identical-signature agreeers (cheap sort keys, one task-local run)."""
+    The per-bucket count is ``count(*) OVER (PARTITION BY band_idx,
+    band_hash)``: ONE exchange on the band key that ReuseExchange then
+    feeds to the pair join and the hot pass's representative window.
+    A groupBy + rejoin shape (map-side count, skew-splittable join)
+    was MEASURED slower on the K=100 Zipf skew corpus (SCALE.md
+    §Band-occupancy: minhash_near_dup 10.9 s window vs 14.8 s groupby,
+    results bit-identical) — it pays a second exchange and an extra
+    join, while the window's task-local sort of a giant family stays
+    cheap because a hot bucket's rows are identical-signature
+    agreeers."""
     sig = _minhash_signature(docs)
     bands = sig.select(
         "doc_id",
@@ -403,16 +388,8 @@ def _band_table(docs: DataFrame, occupancy: str | None = None) -> DataFrame:
         ).alias("band"),
     ).select("doc_id", "band.band_idx", "band.band_hash")
 
-    import os
-
     from pyspark.sql.window import Window
 
-    occupancy = occupancy or os.environ.get(
-        "SPARK_GRAFT_BAND_OCCUPANCY", "window")
-    if occupancy == "groupby":
-        counts = bands.groupBy("band_idx", "band_hash").agg(
-            F.count("*").alias("_bn"))
-        return bands.join(counts, ["band_idx", "band_hash"])
     bucket_n = F.count("*").over(Window.partitionBy("band_idx", "band_hash"))
     return bands.withColumn("_bn", bucket_n)
 

@@ -36,40 +36,22 @@ RUNTIME_CONF = {
 }
 
 
-def _dynamic_conf() -> dict[str, str]:
-    """Env-driven confs, read at session-build/tune time (not import).
-
-    ``SPARK_GRAFT_OPEN_COST``: per-file packing charge when composing
-    scan splits (``spark.sql.files.openCostInBytes``). The CODE default
-    is Spark's own 4 MB — the scale-safe value: at object-store scale
-    with many small files the pad is what prevents over-splitting into
-    file-open storms (guide §6). On page-cached local parquet a file
-    open costs nowhere near 4 MB of scan time and the pad keeps a
-    small table's scan from splitting to the parallelism floor, so
-    bench.py opts into 64 KB via this env — justified by the r13
-    interleaved same-session A/B (plans/r13/scanfloor_ab.json: floor
-    ≥ neutral on 5/6 headline queries, +16% on sales_daily, partition
-    counts 3 → 32 on the sf0.1 lineitem scan). Flipped from an
-    unconditional 64 KB default per VERDICT r12 item 2 so scale-safety
-    no longer depends on an env var.
-    """
-    oc = os.environ.get("SPARK_GRAFT_OPEN_COST")
-    return {"spark.sql.files.openCostInBytes": oc} if oc else {}
-
-
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to a session we did not build (driver-owned).
 
-    Idempotent and cached per session object (r13): ``tune`` is called
-    from every ``catalog.table`` call — ~10 py4j round trips each — and
-    the confs cannot change between calls within one session (env is
-    read once per process, the floor is derived from the session's own
-    core count), so re-applying is pure driver overhead.
+    Memoized per session OBJECT: the confs are applied on the first call
+    for a given ``SparkSession`` and every later call returns at once.
+    ``tune`` runs from every ``catalog.table`` call — ~10 py4j round
+    trips each — and its inputs cannot change within one session: it
+    reads no environment variable, ``RUNTIME_CONF`` is a constant and
+    the scan floor is derived from the session's own core count. A conf
+    the caller sets AFTER the first call is therefore left alone (a
+    fresh session object is tuned afresh).
     """
     if getattr(spark, "_p2bd_tuned", False):
         return spark
     spark._p2bd_tuned = True
-    for k, v in {**RUNTIME_CONF, **_dynamic_conf()}.items():
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -192,6 +174,6 @@ def get_session(app_name: str = "project2_bigdata_spark",
         # submit time)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
-    for k, v in {**RUNTIME_CONF, **_dynamic_conf()}.items():
+    for k, v in RUNTIME_CONF.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -682,8 +682,7 @@ def _collect_file_stats(staging: str, reuse: dict | None = None,
 
     Small commits read footers driver-side (thread-pooled, KB-sized
     reads); commits staging ≥ ``distributed_min`` new files (default
-    ``_STATS_DISTRIBUTED_MIN``, env ``SPARK_GRAFT_STATS_DISTRIBUTED_
-    MIN``) derive the same stats EXECUTOR-side through
+    ``_STATS_DISTRIBUTED_MIN``) derive the same stats EXECUTOR-side through
     :func:`_collect_file_stats_distributed` when a session is passed —
     the last driver-side O(#files) stage in the commit path goes
     distributed exactly when #files makes it matter (r12, VERDICT r11
@@ -709,9 +708,7 @@ def _collect_file_stats(staging: str, reuse: dict | None = None,
 
     if spark is not None and todo:
         if distributed_min is None:
-            distributed_min = int(os.environ.get(
-                "SPARK_GRAFT_STATS_DISTRIBUTED_MIN",
-                _STATS_DISTRIBUTED_MIN))
+            distributed_min = _STATS_DISTRIBUTED_MIN
         if len(todo) >= distributed_min:
             try:
                 stats.update(

@@ -163,26 +163,8 @@ def run_to_batch(
     """
     global _ATEXIT_REGISTERED
     spark = sdf.sparkSession
-    # Bench-only provider fast path (r12, same contract as
-    # SPARK_GRAFT_STREAM_SHUFFLE below): RocksDB pays a per-store
-    # open/commit tax that dominates a bounded replay whose state is a
-    # few thousand rows (measured ~30-40% of the stateful replays at
-    # sf0.1); the default in-heap HDFSBackedStateStoreProvider skips
-    # it. State-backend choice cannot change results — it stores the
-    # same keyed state either way — only where it lives, which is a
-    # deployment-sizing decision exactly like state partition count.
-    # Unset (driver correctness runs, pytest, K=100 stress where the
-    # session-window state OOM'd an 8 GiB heap without RocksDB),
-    # RocksDB remains the 100 TB default.
-    provider = _ROCKSDB
-    if os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER", "").lower() == "hdfs":
-        provider = (
-            _ROCKSDB[0],
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider",
-        )
     try:
-        spark.conf.set(*provider)
+        spark.conf.set(*_ROCKSDB)
     except Exception:
         pass  # conf locked by the host — run with its provider
     sweep_spools(only_dead=True)  # reclaim stopped sessions' spools
@@ -210,52 +192,32 @@ def run_to_batch(
         if post_spill_hook is not None:
             post_spill_hook(batch_id)
 
-    # Bench-only replay fast path (VERDICT r4/r5 streaming-tax item):
-    # the sf0.1 replay's wall time is ~95% fixed machinery, dominated by
-    # opening/committing `spark.sql.shuffle.partitions` RocksDB state
-    # stores per stateful operator per micro-batch. State partition
-    # count does not change RESULTS (each replay starts a fresh
-    # checkpoint; aggregation/join semantics are partitioning-
-    # independent — measured identical output, 9.4 s → 3.6 s warm at
-    # 32 → 4), so the bench sets SPARK_GRAFT_STREAM_SHUFFLE to shrink
-    # the per-batch store count. Unset (the driver's correctness runs,
-    # pytest, the K=100 stress harness) nothing changes: full
-    # session-configured state parallelism and file-sized batches.
-    fast_shuffle = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    orig_shuffle = None
-    if fast_shuffle:
-        orig_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", fast_shuffle)
-    try:
-        writer = (
-            sdf.writeStream.foreachBatch(_spill)
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-        )
-        if checkpoint is None:
-            # Route the throwaway checkpoint through the scratch root
-            # (r13, VERDICT r12 item 6): Spark's implicit temporary
-            # checkpoint always lands in java.io.tmpdir; pointing it at
-            # the same root as the spool lets a deployment put ALL
-            # per-replay scratch I/O (offsets/commits/state + spool) on
-            # its fast mount via SPARK_GRAFT_SCRATCH_DIR. Semantics are
-            # identical to Spark's temp checkpoint — fresh dir per run,
-            # never resumed — and the dir is session-tied via _SPOOLS
-            # (swept when the owning session dies) instead of relying
-            # on Spark's stop-time cleanup.
-            checkpoint = tempfile.mkdtemp(
-                prefix=f"{name}_ck_", dir=_spool_root())
-            _SPOOLS.append((weakref.ref(spark), checkpoint))
-            if not _ATEXIT_REGISTERED:
-                atexit.register(sweep_spools, only_dead=False)
-                _ATEXIT_REGISTERED = True
-        writer = writer.option("checkpointLocation", checkpoint)
-        q = writer.start()
-        q.awaitTermination()
-    finally:
-        if orig_shuffle is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", orig_shuffle)
+    writer = (
+        sdf.writeStream.foreachBatch(_spill)
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint is None:
+        # Route the throwaway checkpoint through the scratch root
+        # (r13, VERDICT r12 item 6): Spark's implicit temporary
+        # checkpoint always lands in java.io.tmpdir; pointing it at
+        # the same root as the spool lets a deployment put ALL
+        # per-replay scratch I/O (offsets/commits/state + spool) on
+        # its fast mount via SPARK_GRAFT_SCRATCH_DIR. Semantics are
+        # identical to Spark's temp checkpoint — fresh dir per run,
+        # never resumed — and the dir is session-tied via _SPOOLS
+        # (swept when the owning session dies) instead of relying
+        # on Spark's stop-time cleanup.
+        checkpoint = tempfile.mkdtemp(
+            prefix=f"{name}_ck_", dir=_spool_root())
+        _SPOOLS.append((weakref.ref(spark), checkpoint))
+        if not _ATEXIT_REGISTERED:
+            atexit.register(sweep_spools, only_dead=False)
+            _ATEXIT_REGISTERED = True
+    writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
+    q.awaitTermination()
     has_files = any(
         f.endswith(".parquet") for _, _, fs in os.walk(spool) for f in fs
     )

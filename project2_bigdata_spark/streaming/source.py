@@ -14,58 +14,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import _probe_schema
 from ..session import tune
-
-#: Schema-probe memo, one entry per path (keyed path → (stamp, schema)):
-#: the file source needs an explicit schema, which costs a batch-scan
-#: footer read per call — and two-source queries (stream-stream joins)
-#: call events_stream twice per build. The stamp invalidates on driver
-#: testdata regen; for a DIRECTORY source it is the max (mtime, size)
-#: over the part files, not the directory inode's own stats — rewriting
-#: a part file in place need not touch the directory mtime (ADVICE r5).
-#: One entry per path keeps the memo bounded across regens.
-_SCHEMA_MEMO: dict = {}
-
-
-def _source_stamp(path: str):
-    import os as _os
-
-    try:
-        st = _os.stat(path)
-        if _os.path.isdir(path):
-            # Walk the WHOLE tree, not just top-level regular files: a
-            # partitioned/nested parquet layout keeps its part files in
-            # subdirectories, and an in-place rewrite there must
-            # invalidate the memo too (ADVICE r6 — same bug class as
-            # the r5 top-level fix, one level deeper). Entries are
-            # keyed by path relative to the source root so a rename is
-            # a stamp change as well.
-            parts = []
-            for root, _dirs, files in _os.walk(path):
-                rel_root = _os.path.relpath(root, path)
-                for fname in files:
-                    s = _os.stat(_os.path.join(root, fname))
-                    parts.append((_os.path.join(rel_root, fname),
-                                  s.st_mtime_ns, s.st_size))
-            return tuple(sorted(parts)) or (st.st_mtime_ns, st.st_size)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
-
-
-def _probe_schema(spark: SparkSession, path: str):
-    stamp = _source_stamp(path)
-    hit = _SCHEMA_MEMO.get(path)
-    if hit is None or hit[0] != stamp or stamp is None:
-        _SCHEMA_MEMO[path] = (stamp, spark.read.parquet(path).schema)
-    return _SCHEMA_MEMO[path][1]
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded DataFrame over ``{sf_dir}/events.parquet``.
 
-    ``maxFilesPerTrigger=1`` keeps micro-batches file-sized; at scale the
-    same reader pointed at a growing directory is the production ingest
+    ``maxFilesPerTrigger=1`` keeps micro-batches file-sized — the
+    multi-batch replay is what exercises watermark advance, state
+    eviction and recovery; at scale the same reader pointed at a growing directory is the production ingest
     (S1's batch-of-50 insert loop collapses into Spark's own
     micro-batching + checkpoint recovery — no hand-rolled retry).
     """
@@ -74,13 +32,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = f"{sf_dir}/events.parquet"
     raw_schema = _probe_schema(spark, path)
-    # Replay batch sizing: file-sized micro-batches by default — the
-    # multi-batch replay is what exercises watermark advance, state
-    # eviction and recovery. SPARK_GRAFT_STREAM_MAX_FILES raises it for
-    # bench-only replays over multi-file directories (the runner's
-    # SPARK_GRAFT_STREAM_SHUFFLE companion); unset everywhere that
-    # checks correctness (driver, pytest, K=100 stress).
-    max_files = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES", "1")
     if os.path.isdir(path):
         # Spark-written table: events.parquet IS a directory of part
         # files (the amplified scale-stress corpora, and any production
@@ -89,7 +40,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stream: the r3 K=100 streaming stress rows passed on zero
         # input because of exactly that (caught and fixed round 4).
         reader = spark.readStream.schema(raw_schema).option(
-            "maxFilesPerTrigger", max_files)
+            "maxFilesPerTrigger", "1")
         sdf = reader.parquet(path)
     else:
         # driver testdata: events.parquet is a single FILE inside
@@ -97,7 +48,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sf_dir and glob-select the file within it
         sdf = (
             spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", max_files)
+            .option("maxFilesPerTrigger", "1")
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )

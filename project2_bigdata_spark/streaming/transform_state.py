@@ -51,11 +51,6 @@ HAVE_TWS = have_protobuf()
 
 _OUT_DDL = "user_id bigint, n_events bigint, n_types bigint, top_type string"
 
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 # ---------------------------------------------------------------------------
 # Pure state-transition logic, shared by both API paths (and unit-tested
 # directly — the part of a custom stateful operator that must be right).
@@ -193,19 +188,8 @@ def user_profiles_stream(
         "favorite type — which is exactly what the oracle recomputes.",
 )
 def q_stream_typed_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    if HAVE_TWS:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB)
-    try:
-        sink = run_to_batch(user_profiles_stream(spark, sf_dir), mode="append")
-    finally:
-        if HAVE_TWS:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
+    # run_to_batch pins the RocksDB provider transformWithState needs
+    sink = run_to_batch(user_profiles_stream(spark, sf_dir), mode="append")
     # one emission per (user × batch touched); n_events grows monotonically,
     # so the max-by-n_events row per user is the final state
     w_last = F.struct(F.col("n_events"), F.col("n_types"), F.col("top_type"))

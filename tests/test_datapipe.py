@@ -401,26 +401,6 @@ def test_hot_bucket_pass_matches_family_linearly(spark, tmp_path):
         spark, d, threshold=0.8, hot_cap=100).count() == 0
 
 
-def test_band_occupancy_shapes_agree(spark, sf_dir):
-    """Both band-occupancy shapes (window count vs groupBy+rejoin —
-    SCALE.md §Band-occupancy, measured at K=100 skew) must be pure
-    physical alternatives: identical minhash_near_dup relations."""
-    from project2_bigdata_spark.operators.dedup import (
-        _shingled_cached, minhash_band_pairs,
-    )
-
-    a = minhash_band_pairs(spark, sf_dir).collect()
-    import os as _os
-
-    _os.environ["SPARK_GRAFT_BAND_OCCUPANCY"] = "groupby"
-    try:
-        b = minhash_band_pairs(spark, sf_dir).collect()
-    finally:
-        _os.environ.pop("SPARK_GRAFT_BAND_OCCUPANCY", None)
-    key = lambda r: (r.doc_a, r.doc_b)  # noqa: E731
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_bloom_prefilter_no_false_negatives_and_prunes(spark, sf_dir):
     """The bloom variant must return the EXACT relation (no false
     negatives — every true gram hit survives the prefilter) while

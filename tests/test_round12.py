@@ -553,11 +553,12 @@ def test_stats_skipping_survives_distributed_collection(spark, tmp_path,
     """End-to-end: a commit whose stats were collected executor-side
     (threshold forced to 1) prunes and answers exactly like one whose
     stats came from the driver walk."""
+    from project2_bigdata_spark.sources import ingest
     from project2_bigdata_spark.sources.ingest import (
         commit_version, read_version,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_STATS_DISTRIBUTED_MIN", "1")
+    monkeypatch.setattr(ingest, "_STATS_DISTRIBUTED_MIN", 1)
     p = str(tmp_path / "t")
     df = spark.createDataFrame([(i, i % 3) for i in range(300)],
                                "k int, m int")

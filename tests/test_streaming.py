@@ -284,34 +284,21 @@ def test_spool_root_warns_on_scheme_bearing_scratch(monkeypatch, tmp_path):
     assert not w, "plain-path scratch root must not warn"
 
 
-def test_stream_shuffle_fast_path_identical_results(
-        spark, sf_dir, monkeypatch):
-    """The bench-only SPARK_GRAFT_STREAM_SHUFFLE replay fast path must
-    not change results — state partition count is semantics-free on a
-    fresh checkpoint — and must restore the session's shuffle-partition
-    conf afterwards (VERDICT r5 item 6)."""
-    from project2_bigdata_spark.plans import REGISTRY
-
-    fn = REGISTRY["stream_tumbling_hourly"].fn
-    base = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "2")
-    fast = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    assert fast == base
-    assert spark.conf.get("spark.sql.shuffle.partitions") == orig
-
-
 def test_schema_memo_invalidates_on_inplace_part_rewrite(tmp_path):
-    """_probe_schema keyed a DIRECTORY source on the directory inode's
-    own (mtime, size); rewriting a part file in place (same filename,
-    same size) need not touch either, so a stale schema could be served
-    (ADVICE r5). The stamp now folds in the part files' own stats, and
-    the memo keeps one entry per path (bounded across regens). Pure
-    filesystem-level test: the probe itself is faked so the unit under
-    test is exactly the stamp/memo logic."""
+    """The schema memo once keyed a DIRECTORY source on the directory
+    inode's own (mtime, size); rewriting a part file in place (same
+    filename, same size) need not touch either, so a stale schema could
+    be served (ADVICE r5; ADVICE r13 for ``catalog.table``). The stamp
+    folds in the part files' own stats, the memo keeps one entry per
+    path (bounded across regens), and the streaming source and
+    ``catalog.table`` share it. Pure filesystem-level test: the probe
+    itself is faked so the unit under test is exactly the stamp/memo
+    logic."""
     import os
 
-    from project2_bigdata_spark.streaming import source as src
+    from pyspark.sql import types as T
+
+    from project2_bigdata_spark import catalog
 
     d = tmp_path / "events.parquet"
     d.mkdir()
@@ -321,16 +308,26 @@ def test_schema_memo_invalidates_on_inplace_part_rewrite(tmp_path):
 
     probes = []
 
+    def _schema(n):
+        return T.StructType([T.StructField("ts", T.TimestampType()),
+                             T.StructField(f"v{n}", T.LongType())])
+
     class _FakeReader:
         def parquet(self, path):
             probes.append(path)
-            return type("R", (), {"schema": f"schema#{len(probes)}"})()
+            return type("R", (), {"schema": _schema(len(probes))})()
 
-    fake_spark = type("S", (), {"read": _FakeReader()})()
+        def schema(self, schema):
+            # catalog.table's explicit-schema scan: hand the schema back
+            return type("W", (), {"parquet": lambda _s, _p: schema})()
 
-    src._SCHEMA_MEMO.clear()
-    assert src._probe_schema(fake_spark, str(d)) == "schema#1"
-    assert src._probe_schema(fake_spark, str(d)) == "schema#1"  # memo hit
+    fake_spark = type("S", (), {"read": _FakeReader(), "_p2bd_tuned": True})()
+
+    catalog._SCHEMA_MEMO.clear()
+    assert catalog._probe_schema(fake_spark, str(d)) == _schema(1)
+    assert catalog._probe_schema(fake_spark, str(d)) == _schema(1)  # hit
+    # catalog.table serves the same memo entry
+    assert catalog.table(fake_spark, str(tmp_path), "events") == _schema(1)
     assert len(probes) == 1
 
     # in-place rewrite: same filename, same size, new mtime — then pin
@@ -341,8 +338,11 @@ def test_schema_memo_invalidates_on_inplace_part_rewrite(tmp_path):
     os.utime(d, ns=(dir_stat.st_atime_ns, dir_stat.st_mtime_ns))
     assert os.stat(d).st_mtime_ns == dir_stat.st_mtime_ns
 
-    assert src._probe_schema(fake_spark, str(d)) == "schema#2", (
+    assert catalog.table(fake_spark, str(tmp_path), "events") == _schema(2), (
+        "catalog.table served a stale schema after in-place part rewrite")
+    assert catalog._probe_schema(fake_spark, str(d)) == _schema(2), (
         "stale schema served after in-place part rewrite")
+    assert len(probes) == 2
     # memo stays bounded: one entry per path across regens
-    assert list(src._SCHEMA_MEMO) == [str(d)]
-    src._SCHEMA_MEMO.clear()
+    assert list(catalog._SCHEMA_MEMO) == [str(d)]
+    catalog._SCHEMA_MEMO.clear()

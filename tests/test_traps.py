@@ -660,3 +660,25 @@ def test_approx_percentile_tracks_exact_thresholds(spark, sf_dir):
         # cumulative span, widened by the GK error band
         assert rank_below_t - eps <= q <= rank_at_t + eps, (
             q, t, rank_below_t, rank_at_t)
+
+
+def test_env_knobs_are_the_deployment_allowlist():
+    """The engine has ONE configuration posture: the only environment
+    variables it, its tools and bench.py read are deployment settings
+    (where data, scratch and checkpoints live; how many cores and how
+    much heap). An env var that switches an engine path — a bench-only
+    fast path, or an experiment arm whose A/B is settled — makes the
+    bench measure a different program than the one a driver runs, so
+    a new one fails here. Static scan: no Spark needed."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "bench.py"]
+    for sub in ("project2_bigdata_spark", "tools"):
+        files += sorted((root / sub).rglob("*.py"))
+    found = set()
+    for f in files:
+        found |= set(re.findall(r"SPARK_GRAFT_([A-Z_]+)", f.read_text()))
+    assert found == {"CHECKPOINT_DIR", "CPUS", "DRIVER_MEM", "SCRATCH_DIR",
+                     "SF_DIR"}, sorted(found)

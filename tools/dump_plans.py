@@ -1,8 +1,9 @@
 """Dump .explain("formatted") for a list of queries.
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> <name1> [name2 ...]
-Writes <out_dir>/<name>_<suffix>.txt for each query. Runs on sf0.1 with
-the bench scan posture (SPARK_GRAFT_OPEN_COST honored if set).
+Writes <out_dir>/<name>_<suffix>.txt for each query. Runs on sf0.1
+(``SPARK_GRAFT_SF_DIR`` overrides) at the same session posture as
+bench.py.
 """
 
 from __future__ import annotations

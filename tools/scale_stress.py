@@ -493,59 +493,6 @@ def sketch_bands(spark, k: int, sf: str | None = None,
     return out
 
 
-def band_occupancy(spark, k: int, timeout_s: int) -> dict:
-    """Measure BOTH band-occupancy shapes (window vs groupBy+rejoin) on
-    the Zipf skew corpus (VERDICT r7 item 6): the embedding leg chose
-    the window count WITH measurement (ReuseExchange feeds the pair
-    join); the minhash leg inherited the argument without one. Protocol:
-    warm the shared shingle index once, then time minhash_near_dup and
-    the hot-bucket pass under each shape, 2 reps each, report mins.
-    Requires ``skew K`` to have synthesized the corpus."""
-    from pyspark.sql import functions as F
-
-    from project2_bigdata_spark.operators import dedup as dd
-    from project2_bigdata_spark.plans import REGISTRY
-
-    sf = skew_dir(k)
-    out: dict[str, object] = {"k": k, "dir": sf}
-    docs = dd._shingled_cached(spark, sf)
-    out["n_docs"] = docs.count()  # warms the persisted shingle index
-
-    results_sig: dict[str, int] = {}
-    for shape in ("window", "groupby"):
-        os.environ["SPARK_GRAFT_BAND_OCCUPANCY"] = shape
-        walls_near, walls_hot = [], []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            with _deadline(spark, f"occ-near-{shape}", timeout_s):
-                REGISTRY["minhash_near_dup"].fn(spark, sf).write.mode(
-                    "overwrite").format("noop").save()
-            walls_near.append(round(time.perf_counter() - t0, 1))
-            t0 = time.perf_counter()
-            with _deadline(spark, f"occ-hot-{shape}", timeout_s):
-                dd.minhash_hot_bucket_matches(spark, sf).write.mode(
-                    "overwrite").format("noop").save()
-            walls_hot.append(round(time.perf_counter() - t0, 1))
-        out[f"{shape}_near_dup_walls"] = walls_near
-        out[f"{shape}_hot_pass_walls"] = walls_hot
-        # result signature so the two shapes are proven semantics-equal
-        with _deadline(spark, f"occ-sig-{shape}", timeout_s):
-            results_sig[shape] = (
-                REGISTRY["minhash_near_dup"].fn(spark, sf)
-                .agg(F.count("*"),
-                     # decimal sum: 386k 64-bit hashes overflow a BIGINT
-                     # under ANSI mode
-                     F.sum(F.xxhash64("doc_a", "doc_b")
-                           .cast("decimal(38,0)")))
-                .first()
-            )
-    os.environ.pop("SPARK_GRAFT_BAND_OCCUPANCY", None)
-    out["shapes_agree"] = bool(
-        tuple(results_sig["window"]) == tuple(results_sig["groupby"]))
-    assert out["shapes_agree"], f"occupancy shapes disagree: {results_sig}"
-    return out
-
-
 def pyds_pushdown(spark, k: int, timeout_s: int) -> dict:
     """Measure filter pushdown through the Python DataSource on a K x
     orders export (VERDICT r8 item 7): one selective scan
@@ -1156,10 +1103,6 @@ def main() -> int:
         if rest and rest[0] == "--timeout":
             rest = rest[1:]
         timeout_s = int(rest[0]) if rest else 900
-        # match bench.py's bench-only streaming replay fast path so the
-        # K x per-query ratios compare like-for-like (correctness
-        # surfaces never set this)
-        os.environ.setdefault("SPARK_GRAFT_STREAM_SHUFFLE", "4")
         names = [n for n in HEADLINE if n in _REG]
         t0 = time.perf_counter()
         res = run(spark, k, names, timeout_s)
@@ -1170,12 +1113,6 @@ def main() -> int:
             "block_total_sec": round(time.perf_counter() - t0, 1),
             "queries": res,
         }))
-    elif mode == "band_occupancy":
-        rest = sys.argv[3:]
-        if rest and rest[0] == "--timeout":
-            rest = rest[1:]
-        print(json.dumps(band_occupancy(
-            spark, k, int(rest[0]) if rest else 1200)))
     elif mode == "skew":
         rest = sys.argv[3:]
         if rest and rest[0] == "--timeout":
