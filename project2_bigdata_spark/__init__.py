@@ -15,6 +15,11 @@ Layout:
 - ``plans``      — the named query registry (queries() + oracle_sql() source)
 - ``streaming``  — Structured Streaming variants over the events table
 - ``ml``         — feature pipeline + per-product model training
+- ``pyworker``   — zip-cache gate installed in Spark Python workers
 """
 
+from . import pyworker
+
 __version__ = "0.1.0"
+
+pyworker.install()

@@ -134,13 +134,11 @@ def chunk_documents_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield idx, len(chunk), " ".join(chunk)
 
     spark.udtf.register("p2bd_chunk_udtf", ChunkUdtf)
-    table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "p2bd_docs_for_chunk_udtf")
     return spark.sql("""
         SELECT d.doc_id, c.chunk_idx, c.n_tokens, c.chunk_text
-        FROM p2bd_docs_for_chunk_udtf d,
+        FROM {docs} d,
              LATERAL p2bd_chunk_udtf(d.text) c
-    """)
+    """, docs=table(spark, sf_dir, "documents"))
 
 
 ORACLE_CHUNKS = f"""

@@ -675,8 +675,7 @@ def oracle_minhash_incremental(threshold: float = 0.8) -> str:
     """
 
 
-@F.pandas_udf(LongType())
-def simhash64(texts: pd.Series) -> pd.Series:
+def _simhash64(texts: pd.Series) -> pd.Series:
     """64-bit SimHash over whitespace tokens (Arrow-vectorized batch UDF).
 
     Python is acceptable here: SimHash needs per-feature bit spreading
@@ -717,6 +716,11 @@ def simhash64(texts: pd.Series) -> pd.Series:
     np.add.at(acc, row_idx, pm[inv])
     v = ((acc > 0).astype(np.uint64) << bit_pos).sum(axis=1, dtype=np.uint64)
     return pd.Series(v.view(np.int64))  # wrap to signed 64-bit
+
+
+# Wrapped, not decorated: the module attribute ``_simhash64`` is the plain
+# function, so it pickles by reference and each worker imports the package.
+simhash64 = F.pandas_udf(_simhash64, LongType())
 
 
 def simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2352,12 +2352,12 @@ def q_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         *[w_hex.replace("u ", f"u{rep} ") + f" AS w{rep}"
           for rep in range(_BOOT_B)])
-    weighted.createOrReplaceTempView("_boot_weighted")
     aggs_sql = ", ".join(
         f"CAST(SUM(w{rep}) AS BIGINT) AS n_{rep}, "
         f"CAST(SUM(w{rep} * cents) AS BIGINT) AS s_{rep}"
         for rep in range(_BOOT_B))
-    one_row = spark.sql(f"SELECT {aggs_sql} FROM _boot_weighted")
+    one_row = spark.sql(f"SELECT {aggs_sql} FROM {{weighted}}",
+                        weighted=weighted)
     stack_args = ", ".join(
         f"{rep}, n_{rep}, s_{rep}" for rep in range(_BOOT_B))
     per_rep = one_row.selectExpr(
@@ -3891,7 +3891,6 @@ def q_permutation_test_arm_revenue(spark: SparkSession, sf_dir: str) -> DataFram
         f"CAST(SUM(CASE WHEN {_perm_parity(f'{b}:', True)} = 0 "
         f"THEN 1 ELSE 0 END) AS BIGINT) AS na{b}"
         for b in range(_PERM_B))
-    base.createOrReplaceTempView("_perm_base")
     agg = spark.sql(f"""
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(cents) AS BIGINT) AS s,
@@ -3900,8 +3899,8 @@ def q_permutation_test_arm_revenue(spark: SparkSession, sf_dir: str) -> DataFram
                CAST(SUM(CASE WHEN {par_obs} = 0
                     THEN 1 ELSE 0 END) AS BIGINT) AS na_obs,
                {rep_sql}
-        FROM _perm_base
-    """)
+        FROM {{base}}
+    """, base=base)
     t = agg.withColumn("t_obs", F.expr(_perm_t("sa_obs", "na_obs")))
     extreme = " + ".join(
         f"(CASE WHEN abs({_perm_t(f'sa{b}', f'na{b}')}) >= abs(t_obs) "
@@ -4638,7 +4637,6 @@ def q_bh_fdr_segment_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(SUM(CASE WHEN {_perm_parity(f'{b}:', True)} = 0 "
         f"THEN 1 ELSE 0 END) AS BIGINT) AS na{b}"
         for b in range(_PERM_B))
-    base.createOrReplaceTempView("_bh_base")
     agg = spark.sql(f"""
         SELECT segment,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -4648,9 +4646,9 @@ def q_bh_fdr_segment_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CASE WHEN {par_obs} = 0
                     THEN 1 ELSE 0 END) AS BIGINT) AS na_obs,
                {rep_sql}
-        FROM _bh_base
+        FROM {{base}}
         GROUP BY segment
-    """)
+    """, base=base)
     extreme = " + ".join(
         f"(CASE WHEN abs({_perm_t(f'sa{b}', f'na{b}')}) >= abs(t_obs) "
         f"THEN 1 ELSE 0 END)"

@@ -177,7 +177,6 @@ def q_grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark_ = spark
     from ..catalog import table as _t
 
-    _t(spark_, sf_dir, "orders").createOrReplaceTempView("_gs_orders")
     # SQL twin of dsum's BIGINT-cents path (r13) — see functions.money
     return spark_.sql("""
         SELECT o_orderstatus AS status, o_orderpriority AS priority,
@@ -186,9 +185,9 @@ def q_grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(CAST(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
                               AS DECIMAL(38,2)) / 100 AS STRING) AS DOUBLE)
                  AS total_revenue
-        FROM _gs_orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-    """)
+    """, orders=_t(spark_, sf_dir, "orders"))
 
 
 @register(

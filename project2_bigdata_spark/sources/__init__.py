@@ -9,5 +9,3 @@
 - S3's ``allowDiskUse`` and S1's batch-of-50 retry loop need no code at
   all: Spark spills and retries at the task level (SURVEY.md §4.1).
 """
-
-from . import ingest  # noqa: F401  registers ingest_extended_json_repair

@@ -7,7 +7,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import the package by name (pickled-by-reference UDFs,
+# the DataSource connector): put the checkout on their path too, so the
+# suite runs from any working directory.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from project2_bigdata_spark.session import get_session  # noqa: E402
 

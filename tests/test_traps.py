@@ -682,3 +682,37 @@ def test_env_knobs_are_the_deployment_allowlist():
         found |= set(re.findall(r"SPARK_GRAFT_([A-Z_]+)", f.read_text()))
     assert found == {"CHECKPOINT_DIR", "CPUS", "DRIVER_MEM", "SCRATCH_DIR",
                      "SF_DIR"}, sorted(found)
+
+
+def test_temp_views_only_in_register_views():
+    """A query that publishes a fixed-name temp view mutates the shared
+    session catalog: two concurrent queries on one session overwrite each
+    other's view. Queries pass DataFrames to ``spark.sql`` as arguments
+    (``spark.sql("... FROM {base}", base=df)``) instead; the only named
+    views are the SQL view layer of ``catalog.register_views``. Static
+    scan: no Spark needed."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "project2_bigdata_spark"
+    creators = {"createTempView", "createOrReplaceTempView",
+                "createGlobalTempView", "createOrReplaceGlobalTempView",
+                "registerTempTable"}
+    found = set()
+
+    def scan(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(child, f"{scope}.{child.name}")
+                continue
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in creators):
+                found.add(scope)
+            scan(child, scope)
+
+    for f in sorted(pkg.rglob("*.py")):
+        scan(ast.parse(f.read_text()),
+             ".".join(f.relative_to(pkg).with_suffix("").parts))
+    assert found == {"catalog.register_views"}, sorted(found)
