@@ -157,6 +157,13 @@ def _iter_range_lines(fh, start: int, end: int, skip_first: bool,
             yield tail
 
 
+def _cuts(lo: int, hi: int, n: int) -> list[tuple[int, int]]:
+    """``[lo, hi)`` cut into exactly ``n`` contiguous non-empty spans
+    (``1 <= n <= hi - lo``) whose lengths differ by at most one byte."""
+    bounds = [lo + (hi - lo) * i // n for i in range(n + 1)]
+    return list(zip(bounds, bounds[1:]))
+
+
 class JsonlSaleReader(DataSourceReader):
     def __init__(self, options: dict):
         self.path = options["path"]
@@ -206,13 +213,11 @@ class JsonlSaleReader(DataSourceReader):
         for f, size in files:
             if size == 0:
                 continue
-            # ranges proportional to file share, >= 1 per file
-            n_f = max(1, round(self.n * size / total))
-            step = max(1, size // n_f)
+            # ranges proportional to file share, >= 1 per file, cut at
+            # exact boundaries so a file gets exactly n_f of them
+            n_f = min(size, max(1, round(self.n * size / total)))
             parts.extend(
-                _ByteRange(f, s, min(s + step, size))
-                for s in range(0, size, step)
-            )
+                _ByteRange(f, s, e) for s, e in _cuts(0, size, n_f))
         return parts
 
     def read(self, part):
@@ -589,7 +594,12 @@ def register_jsonl_source(spark) -> None:
     spark.dataSource.register(JsonlSaleDataSource)
 
 
-def read_jsonl_sales(spark, path: str, num_partitions: int = 8):
+def read_jsonl_sales(spark, path: str, num_partitions: int | None = None):
+    """Batch read through the connector. ``num_partitions`` byte ranges
+    (None: one per task slot, ``defaultParallelism``), split across
+    the export's files in proportion to their size."""
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism
     register_jsonl_source(spark)
     return (
         spark.read.format(FORMAT_NAME)
@@ -714,11 +724,9 @@ class JsonlSaleStreamReader:
         lo, hi = start["byte"], end["byte"]
         if hi <= lo:
             return [_StreamRange(lo, lo, False)]
-        step = max(1, (hi - lo) // self.n)
         return [
-            _StreamRange(s, min(s + step, hi), skip_first=(s != lo),
-                         at_window_end=(s + step >= hi))
-            for s in range(lo, hi, step)
+            _StreamRange(s, e, skip_first=(s != lo), at_window_end=(e == hi))
+            for s, e in _cuts(lo, hi, min(self.n, hi - lo))
         ]
 
     def read(self, part):

@@ -30,3 +30,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def executed_plan(spark, sf_dir):
+    """``name -> executedPlan().toString()`` of a registered query at
+    ``sf_dir``, built at most once per test run: the whole-registry plan
+    scans share one build of every query."""
+    from project2_bigdata_spark.plans import REGISTRY
+
+    cache: dict[str, str] = {}
+
+    def plan(name: str) -> str:
+        if name not in cache:
+            df = REGISTRY[name].fn(spark, sf_dir)
+            cache[name] = df._jdf.queryExecution().executedPlan().toString()
+        return cache[name]
+
+    return plan

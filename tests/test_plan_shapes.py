@@ -136,7 +136,7 @@ def test_no_cartesian_product(spark, sf_dir, name):
 
 
 @pytest.mark.slow
-def test_no_nested_loop_join_outside_allowlist(spark, sf_dir):
+def test_no_nested_loop_join_outside_allowlist(executed_plan):
     """A BroadcastNestedLoopJoin is only acceptable where the broadcast
     side is a tiny probe/range relation by construction; anywhere else
     it means an equi-join condition was lost (the classic silent
@@ -145,7 +145,7 @@ def test_no_nested_loop_join_outside_allowlist(spark, sf_dir):
     for name in REGISTRY:
         if name in BNLJ_OK or name.startswith(("stream_", "ml_", "multimodal_")):
             continue
-        plan = plan_of(spark, sf_dir, name)
+        plan = executed_plan(name)
         if "BroadcastNestedLoopJoin" in plan:
             offenders.append(name)
     assert not offenders, f"nested-loop joins leaked into: {offenders}"
@@ -171,14 +171,14 @@ def test_scalar_augment_joins_are_broadcast(spark, sf_dir, name):
 
 
 @pytest.mark.slow
-def test_no_python_udf_outside_allowlist(spark, sf_dir):
+def test_no_python_udf_outside_allowlist(executed_plan):
     """U1: parity paths are JVM-only; Python appears only in the
     documented Arrow-batch operators."""
     offenders = []
     for name in REGISTRY:
         if name in PYTHON_OK or name.startswith("stream_"):
             continue  # streaming queries build their own bounded replay
-        plan = plan_of(spark, sf_dir, name)
+        plan = executed_plan(name)
         if ("BatchEvalPython" in plan or "ArrowEvalPython" in plan
                 or "InPandas" in plan       # FlatMapGroups/CoGroups/Map
                 or "] (Python)" in plan):   # Python Data Source scans

@@ -58,21 +58,21 @@ def test_dimension_joins_broadcast(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_no_cartesian_products(spark, sf_dir):
+def test_no_cartesian_products(executed_plan):
     """No registered query may plan a cartesian product. (Broadcast
     nested-loop is fine — that's the deliberate range-join strategy.)"""
     offenders = []
-    for name, q in sorted(REGISTRY.items()):
+    for name in sorted(REGISTRY):
         if name.startswith("stream_") or name.startswith("ml_"):
             continue  # streaming queries materialize eagerly; ml trains
-        plan = _plan(q.fn(spark, sf_dir))
+        plan = executed_plan(name)
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, f"cartesian products in: {offenders}"
 
 
 @pytest.mark.slow
-def test_no_python_row_udfs_in_core_paths(spark, sf_dir):
+def test_no_python_row_udfs_in_core_paths(executed_plan):
     """Relational/nested/window queries must stay JVM-side: no
     BatchEvalPython (row-at-a-time UDF) anywhere; ArrowEvalPython is
     allowed only in the explicitly-Python operators (simhash,
@@ -81,10 +81,10 @@ def test_no_python_row_udfs_in_core_paths(spark, sf_dir):
                      "ml_train_per_product", "ml_sparkml_global",
                      "chunk_documents_udtf"}  # r9: the Arrow UDTF
                      # surface exhibit (lateral table function)
-    for name, q in sorted(REGISTRY.items()):
+    for name in sorted(REGISTRY):
         if name.startswith("stream_") or name in allowed_arrow or name.startswith("ml_"):
             continue
-        plan = _plan(q.fn(spark, sf_dir))
+        plan = executed_plan(name)
         assert "BatchEvalPython" not in plan, f"row-wise Python UDF in {name}"
         assert "ArrowEvalPython" not in plan, f"unexpected pandas UDF in {name}"
 

@@ -477,7 +477,9 @@ def test_pyds_split_invariance(spark, sf_dir, tmp_path):
 
 
 def test_pyds_partitions_cover_file_exactly(tmp_path):
-    """partitions() plans disjoint byte ranges covering [0, size)."""
+    """partitions() plans disjoint byte ranges covering [0, size), and
+    exactly the requested count for one file (no tail range when the
+    size is not a multiple of it; one byte per range at most)."""
     from project2_bigdata_spark.sources.pyds import JsonlSaleReader
 
     p = tmp_path / "f.jsonl"
@@ -486,6 +488,7 @@ def test_pyds_partitions_cover_file_exactly(tmp_path):
     for n in (1, 3, 8, 1000):
         parts = JsonlSaleReader(
             {"path": str(p), "num_partitions": str(n)}).partitions()
+        assert len(parts) == min(n, size), n
         spans = sorted((q.start, q.end) for q in parts)
         assert spans[0][0] == 0 and spans[-1][1] == size
         for (s1, e1), (s2, _) in zip(spans, spans[1:]):
@@ -497,8 +500,9 @@ _DOC = ('{"_id": {"$oid": "%d"}, "saleDateRaw": "\\"2000-01-0%dT00:00:00Z\\"", '
 
 
 def test_pyds_stream_window_partitions_own_each_line_once(tmp_path):
-    """Split ownership inside a micro-batch window: however the window
-    splits into sub-ranges, every line parses exactly once, and the
+    """Split ownership inside a micro-batch window: the window splits
+    into exactly the requested number of sub-ranges (only the last one
+    ends at the window end), every line parses exactly once, and the
     window's first sub-range keeps its first line (the window start is
     a line boundary — only interior starts skip a partial line)."""
     from project2_bigdata_spark.sources.pyds import JsonlSaleStreamReader
@@ -509,6 +513,9 @@ def test_pyds_stream_window_partitions_own_each_line_once(tmp_path):
     for n in (1, 3, 7, 64):
         r = JsonlSaleStreamReader({"path": str(p), "num_partitions": str(n)})
         parts = r.partitions({"byte": 0}, {"byte": size})
+        assert len(parts) == min(n, size), n
+        assert [q.at_window_end for q in parts] == [False] * (
+            len(parts) - 1) + [True]
         got = [v for part in parts for batch in r.read(part)
                for v in batch.column(0).to_pylist()]  # Arrow (r9)
         assert sorted(got, key=int) == [str(i) for i in range(1, 30)], n

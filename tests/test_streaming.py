@@ -258,6 +258,62 @@ def test_run_to_batch_spool_lifecycle(spark, sf_dir, monkeypatch, tmp_path):
     assert not os.path.exists(spool)
 
 
+def test_sweep_probes_each_live_session_once(spark, monkeypatch, tmp_path):
+    """sweep_spools checks liveness once per distinct session per sweep,
+    not once per registered spool: the registry only grows while a
+    session lives, and every spool creation and replay sweeps it."""
+    import os
+    import weakref
+
+    from project2_bigdata_spark.streaming import runner
+
+    paths = [str(tmp_path / f"spool{i}") for i in range(25)]
+    for p in paths:
+        os.makedirs(p)
+    monkeypatch.setattr(
+        runner, "_SPOOLS", [(weakref.ref(spark), p) for p in paths])
+    probed = []
+    real = runner._session_alive
+    monkeypatch.setattr(
+        runner, "_session_alive", lambda s: probed.append(s) or real(s))
+    assert runner.sweep_spools(only_dead=True) == []
+    assert len(probed) == 1
+    assert [p for _, p in runner._SPOOLS] == paths
+    assert all(os.path.isdir(p) for p in paths)
+
+
+def test_replay_runs_one_wave_of_state_stores(spark, sf_dir, tmp_path):
+    """A stateful replay runs min(shuffle.partitions, defaultParallelism)
+    state stores: the offset log of a caller checkpoint records the
+    derived count, the caller's session conf is restored afterwards,
+    and the rows equal the oracle's."""
+    from .oracle_harness import canon, duck_con
+
+    key = "spark.sql.shuffle.partitions"
+    slots = spark.sparkContext.defaultParallelism
+    caller = str(2 * slots)
+    ck = tmp_path / "ck"
+    before = spark.conf.get(key)
+    spark.conf.set(key, caller)
+    try:
+        out = run_to_batch(
+            events_stream(spark, sf_dir)
+            .groupBy("event_type")
+            .agg(F.count("*").alias("n")),
+            mode="complete",
+            checkpoint=str(ck), spool=str(tmp_path / "spool"),
+        )
+        assert spark.conf.get(key) == caller
+        got = canon(out.toPandas())
+    finally:
+        spark.conf.set(key, before)
+    offsets = (ck / "offsets" / "0").read_text()
+    assert f'"{key}":"{slots}"' in offsets, offsets
+    want = canon(duck_con(sf_dir).execute(
+        "SELECT event_type, COUNT(*) AS n FROM events GROUP BY 1").fetchdf())
+    assert got.equals(want), (got, want)
+
+
 def test_spool_root_warns_on_scheme_bearing_scratch(monkeypatch, tmp_path):
     """A scheme-bearing scratch root (hdfs://, s3a://) cannot back the
     POSIX spool; the fallback to driver-local tmp must WARN so a
