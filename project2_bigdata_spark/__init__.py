@@ -15,7 +15,7 @@ Layout:
 - ``plans``      — the named query registry (queries() + oracle_sql() source)
 - ``streaming``  — Structured Streaming variants over the events table
 - ``ml``         — feature pipeline + per-product model training
-- ``pyworker``   — zip-cache gate installed in Spark Python workers
+- ``pyworker``   — Spark Python worker start-up: compiled pyspark, zip-cache gate
 """
 
 from . import pyworker

@@ -765,14 +765,19 @@ def _make_stream_reader(options):
     return _Reader()
 
 
-def stream_jsonl_sales(spark, path: str, num_partitions: int = 8,
+def stream_jsonl_sales(spark, path: str, num_partitions: int | None = None,
                        eq: dict | None = None):
-    """``eq`` (r10): column → equality value, evaluated INSIDE the
-    stream reader before the Python→JVM boundary (the streaming API's
-    options-level analog of the batch reader's pushFilters; string
-    equalities additionally engage the bytes-level prefilter)."""
+    """Streaming read through the connector: each micro-batch window is
+    cut into ``num_partitions`` byte ranges (None: one per task slot,
+    ``defaultParallelism``). ``eq`` (r10): column → equality value,
+    evaluated INSIDE the stream reader before the Python→JVM boundary
+    (the streaming API's options-level analog of the batch reader's
+    pushFilters; string equalities additionally engage the bytes-level
+    prefilter)."""
     import json
 
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism
     register_jsonl_source(spark)
     reader = (
         spark.readStream.format(FORMAT_NAME)

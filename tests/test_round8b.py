@@ -521,6 +521,41 @@ def test_pyds_stream_window_partitions_own_each_line_once(tmp_path):
         assert sorted(got, key=int) == [str(i) for i in range(1, 30)], n
 
 
+def test_pyds_stream_reads_one_range_per_task_slot(spark, tmp_path, monkeypatch):
+    """A replay of ``stream_jsonl_sales(spark, path)`` cuts each
+    micro-batch into ``defaultParallelism`` byte ranges, so it runs one
+    read task per task slot, and returns every row exactly once."""
+    from pyspark import SparkContext
+
+    from project2_bigdata_spark.sources.pyds import stream_jsonl_sales
+
+    p = tmp_path / "slots.jsonl"
+    p.write_text("".join(_DOC % (i, (i % 8) + 1) + "\n" for i in range(1, 30)))
+
+    def replay(checkpoint: str):
+        tasks, rows = [], []
+
+        def batch(df, batch_id):
+            got = [r.sale_id for r in df.collect()]
+            if got:
+                tasks.append(df.rdd.getNumPartitions())
+                rows.extend(got)
+
+        q = (stream_jsonl_sales(spark, str(p))
+             .writeStream.foreachBatch(batch)
+             .trigger(availableNow=True)
+             .option("checkpointLocation", str(tmp_path / checkpoint)).start())
+        q.awaitTermination()
+        return tasks, sorted(rows, key=int)
+
+    want = [str(i) for i in range(1, 30)]
+    assert replay("ck") == ([spark.sparkContext.defaultParallelism], want)
+    # another slot count gives another cut: derived, not a literal
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 3))
+    assert replay("ck3") == ([3], want)
+
+
 @pytest.mark.slow
 def test_pyds_stream_growing_source_incremental_batch(spark, tmp_path):
     """The growing-source contract: a second AvailableNow run against

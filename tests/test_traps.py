@@ -664,7 +664,8 @@ def test_approx_percentile_tracks_exact_thresholds(spark, sf_dir):
 
 def test_env_knobs_are_the_deployment_allowlist():
     """The engine has ONE configuration posture: the only environment
-    variables it, its tools and bench.py read are deployment settings
+    variables it, its tools, bench.py and the worker start-up hook
+    (``sitecustomize.py``) read are deployment settings
     (where data, scratch and checkpoints live; how many cores and how
     much heap). An env var that switches an engine path — a bench-only
     fast path, or an experiment arm whose A/B is settled — makes the
@@ -674,7 +675,7 @@ def test_env_knobs_are_the_deployment_allowlist():
     import re
 
     root = pathlib.Path(__file__).resolve().parent.parent
-    files = [root / "bench.py"]
+    files = [root / "bench.py", root / "sitecustomize.py"]
     for sub in ("project2_bigdata_spark", "tools"):
         files += sorted((root / sub).rglob("*.py"))
     found = set()
