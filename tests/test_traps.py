@@ -717,3 +717,44 @@ def test_temp_views_only_in_register_views():
         scan(ast.parse(f.read_text()),
              ".".join(f.relative_to(pkg).with_suffix("").parts))
     assert found == {"catalog.register_views"}, sorted(found)
+
+
+def test_one_lakehouse_publish_seam():
+    """Every lakehouse write publishes through ONE seam and retries
+    through ONE optimistic loop: copies of the rename-publish, the
+    retry loop or the hardlink fallback drift apart (two DML verbs once
+    missed the pinned-layout rule the maintenance verbs follow). Static
+    scan of ``sources/ingest.py``, per top-level function: exactly one
+    renames a staging dir into a ``v=`` name, exactly one loops over
+    ``range(max_retries + 1)``, and exactly one calls ``os.link``. No
+    Spark needed."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    tree = ast.parse(
+        (root / "project2_bigdata_spark/sources/ingest.py").read_text())
+
+    def is_os(node, attr):
+        return (isinstance(node, ast.Attribute) and node.attr == attr
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os")
+
+    publishers, loopers, linkers = set(), set(), set()
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.Call) and is_os(node.func, "rename")
+                    and len(node.args) == 2
+                    and ("stag" in ast.unparse(node.args[0])
+                         or "v=" in ast.unparse(node.args[1]))):
+                publishers.add(fn.name)
+            if (isinstance(node, ast.For)
+                    and ast.unparse(node.iter) == "range(max_retries + 1)"):
+                loopers.add(fn.name)
+            if is_os(node, "link"):
+                linkers.add(fn.name)
+    assert len(publishers) == 1, sorted(publishers)
+    assert len(loopers) == 1, sorted(loopers)
+    assert len(linkers) == 1, sorted(linkers)
