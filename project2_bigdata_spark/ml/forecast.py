@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.money import oracle_dsum
+from ..functions.money import DEC, dsum, oracle_dsum
 from ..plans.registry import register
 from ..plans.windowed import _DAILY_SQL, _daily
 
@@ -88,12 +88,11 @@ def q_wape_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("total_quantity", 7).over(w).alias("yhat"),
     ).filter(F.col("yhat").isNotNull())
     err = F.abs(F.col("total_quantity") - F.col("yhat"))
-    dec = lambda c: F.sum(c.cast("decimal(18,2)")).cast("string").cast("double")  # noqa: E731
     return lagged.groupBy("product").agg(
         F.count("*").alias("n"),
-        dec(err).alias("sum_abs_err"),
-        dec(F.col("total_quantity")).alias("sum_actual"),
-        (dec(err) / dec(F.col("total_quantity"))).alias("wape"),
+        dsum(err, "sum_abs_err", dec=DEC),
+        dsum("total_quantity", "sum_actual", dec=DEC),
+        (dsum(err, dec=DEC) / dsum("total_quantity", dec=DEC)).alias("wape"),
     )
 
 

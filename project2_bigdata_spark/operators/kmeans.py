@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table_parallel
+from ..functions.money import dsum
 from ..plans.registry import register
 from ..session import truncate_lineage
 
@@ -77,7 +78,7 @@ def _update(assigned: DataFrame) -> DataFrame:
         "cid", F.posexplode("ed").alias("pos", "val")
     ).groupBy("cid", "pos").agg(
         (
-            F.sum(F.col("val").cast("decimal(18,6)")).cast("string").cast("double")
+            dsum(F.col("val"), dec="decimal(18,6)")
             / F.count("*")
         ).alias("cmean")
     )

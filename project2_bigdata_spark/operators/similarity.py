@@ -797,7 +797,7 @@ def ann_recall_ndcg(
     ULP differences across engines) then summed as exact DECIMAL(28,10)
     so per-query sums are order-insensitive under any partitioning.
     """
-    from ..functions.money import dsum10
+    from ..functions.money import dsum
     from ..session import truncate_lineage
 
     # the ground-truth relation feeds FOUR consumers (idcg + one join
@@ -806,7 +806,8 @@ def ann_recall_ndcg(
     # item 6; the q_tpch_q2 `eligible` lesson)
     brute = truncate_lineage(brute_force_topk(spark, sf_dir, n_queries, k))
     idcg = brute.groupBy("query_id").agg(
-        dsum10("round(cos_sim / ln(cast(rnk + 1 as double)), 6)", "idcg")
+        dsum("round(cos_sim / ln(cast(rnk + 1 as double)), 6)", "idcg",
+             dec="decimal(28,10)")
     )
     methods = [
         ("lsh", lsh_ann_topk(spark, sf_dir, n_queries, k)),
@@ -832,10 +833,10 @@ def ann_recall_ndcg(
         )
         dcg = j.groupBy("query_id").agg(
             F.count("gain_sim").cast("int").alias("n_hits"),
-            dsum10(
+            dsum(
                 "round(coalesce(gain_sim, cast(0 as double)) / "
                 "ln(cast(rnk_ann + 1 as double)), 6)",
-                "dcg",
+                "dcg", dec="decimal(28,10)",
             ),
         )
         scored = (
@@ -907,7 +908,7 @@ def ann_mrr(
     contributes 0). Same bounded eval shape; per-query reciprocals
     round to 6dp then sum as exact DECIMAL(28,10), so the mean is
     order-insensitive."""
-    from ..functions.money import dsum10
+    from ..functions.money import dsum
     from ..session import truncate_lineage
 
     brute = truncate_lineage(brute_force_topk(spark, sf_dir, n_queries, k))
@@ -933,7 +934,7 @@ def ann_mrr(
             .select(F.round(F.lit(1.0) / F.col("first_hit"), 6).alias("rr"))
         )
         scored = per_q.agg(
-            dsum10("rr", "rr_sum")
+            dsum("rr", "rr_sum", dec="decimal(28,10)")
         ).select(
             F.lit(name).alias("method"),
             F.lit(nq).cast("bigint").alias("n_queries"),

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.money import oracle_dsum_as
+from ..functions.money import dsum, oracle_dsum
 
 N_MONTHS = 12
 YEAR_A = 1996
@@ -38,8 +38,6 @@ YEAR_B = 1997
 
 
 def _monthly(li: DataFrame, year: int) -> DataFrame:
-    from ..functions.money import dsum_as
-
     # range predicate, not year(col)==Y: a function over the column is
     # opaque to parquet row-group stats; the range reaches PushedFilters
     return (
@@ -48,8 +46,8 @@ def _monthly(li: DataFrame, year: int) -> DataFrame:
             & (F.col("l_shipdate") < f"{year + 1}-01-01")
         )
         .groupBy("l_partkey", F.month("l_shipdate").alias("m"))
-        .agg(dsum_as("l_extendedprice * (1 - l_discount)",
-                     "decimal(18,4)", "rev"))
+        .agg(dsum("l_extendedprice * (1 - l_discount)",
+                  "rev", dec="decimal(18,4)"))
     )
 
 
@@ -217,8 +215,8 @@ def oracle_dtw_seasonal(key_mod: int | None = None) -> str:
     MATERIALIZED forces a binding barrier per DP row, so expansion is
     linear: within a row each alias is referenced laterally once, and
     the previous row's cells are materialized columns."""
-    rev = oracle_dsum_as(
-        "l_extendedprice * (1 - l_discount)", "DECIMAL(18,4)", "rev")
+    rev = oracle_dsum(
+        "l_extendedprice * (1 - l_discount)", "rev", dec="DECIMAL(18,4)")
     c = "abs(a[{i}] - b[{j}])"
     row_ctes: list[str] = []
     # Per-row-unique column names (v{i}_{j}): an alias named like a

@@ -21,8 +21,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..functions.money import (
-    DEC, DEC10, _cents, _cents_sum_to_double, dsum, dsum_as, oracle_dsum,
-    oracle_dsum_as,
+    DEC, cents, cents_to_double, dec_to_double, dsum, oracle_dsum,
 )
 from ..operators.rank import global_ntile
 from ..operators.salesviews import sale_lines
@@ -314,18 +313,18 @@ def q_pareto_revenue_80(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = (
         _daily(spark, sf_dir)
         .groupBy("product")
-        .agg(F.sum(_cents(F.col("total_revenue"))).alias("rev"))
+        .agg(F.sum(cents(F.col("total_revenue"))).alias("rev"))
     )
     ord_w = Window.orderBy(F.desc("rev"), F.asc("product"))
     cum = F.sum("rev").over(ord_w.rowsBetween(Window.unboundedPreceding, 0))
     tot = F.sum("rev").over(Window.partitionBy())
-    as_d = _cents_sum_to_double
     return totals.select(
         "product",
-        as_d(F.col("rev")).alias("total_revenue"),
+        cents_to_double(F.col("rev")).alias("total_revenue"),
         F.row_number().over(ord_w).cast("int").alias("rnk"),
-        (as_d(cum) / as_d(tot)).alias("cum_share"),
-        (as_d(cum - F.col("rev")) < 0.8 * as_d(tot)).cast("int").alias("in_top80"),
+        (cents_to_double(cum) / cents_to_double(tot)).alias("cum_share"),
+        (cents_to_double(cum - F.col("rev")) < 0.8 * cents_to_double(tot))
+        .cast("int").alias("in_top80"),
     )
 
 
@@ -956,7 +955,6 @@ def q_rolling_corr_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("date")
         .rowsBetween(-(_CORR_SPAN - 1), 0)
     )
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
     daily = _daily(spark, sf_dir)
     # 2dp window sums ride BIGINT cents (r13, VERDICT r12 item 4 — the
     # dsum device applied inside a window frame): total_quantity /
@@ -971,21 +969,21 @@ def q_rolling_corr_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("date", "yyyy-MM-dd").alias("date"),
         F.count("*").over(w).cast("int").alias("n_obs"),
         F.count("*").over(w).cast("double").alias("n"),
-        _cents_sum_to_double(
-            F.sum(_cents(F.col("total_quantity"))).over(w)).alias("sx"),
-        _cents_sum_to_double(
-            F.sum(_cents(F.col("total_revenue"))).over(w)).alias("sy"),
-        as_d(
+        cents_to_double(
+            F.sum(cents(F.col("total_quantity"))).over(w)).alias("sx"),
+        cents_to_double(
+            F.sum(cents(F.col("total_revenue"))).over(w)).alias("sy"),
+        dec_to_double(
             F.sum(
                 F.expr("total_quantity * total_quantity").cast("decimal(28,4)")
             ).over(w)
         ).alias("sxx"),
-        as_d(
+        dec_to_double(
             F.sum(
                 F.expr("total_revenue * total_revenue").cast("decimal(28,4)")
             ).over(w)
         ).alias("syy"),
-        as_d(
+        dec_to_double(
             F.sum(
                 F.expr("total_quantity * total_revenue").cast("decimal(28,4)")
             ).over(w)
@@ -1102,7 +1100,7 @@ def q_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / 1e6).alias("c"),
             )
         )
-        dec = F.sum(F.col("c").cast("decimal(18,6)")).cast("string").cast("double")
+        dec = dsum(F.col("c"), dec="decimal(18,6)")
         return (
             contrib.groupBy("u").agg(dec.alias("s"))
             .crossJoin(F.broadcast(nn))
@@ -1473,10 +1471,7 @@ def q_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = F.round(F.pow(F.lit(0.5), F.col("dt_seconds").cast("double") / 900.0), 9)
     w = Window.partitionBy("purchase_id")
-    total_raw = (
-        F.sum(F.col("raw").cast("decimal(18,9)")).over(w)
-        .cast("string").cast("double")
-    )
+    total_raw = dec_to_double(F.sum(F.col("raw").cast("decimal(18,9)")).over(w))
     return (
         touches.withColumn("raw", raw)
         .select(
@@ -1651,8 +1646,8 @@ def q_chisq_priority_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("contrib"),
     )
     chi2 = (
-        F.sum(F.col("contrib").cast("decimal(18,6)")).over(Window.partitionBy())
-        .cast("string").cast("double")
+        dec_to_double(F.sum(F.col("contrib").cast("decimal(18,6)"))
+                      .over(Window.partitionBy()))
     )
     return with_e.withColumn("chi2_total", chi2)
 
@@ -1881,7 +1876,7 @@ def q_trimmed_mean_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo = F.floor(F.col("n") * 0.1).cast("bigint")
     kept = ranked.filter((F.col("rn") > lo) & (F.col("rn") <= F.col("n") - lo))
-    dec_sum = _cents_sum_to_double(F.sum(_cents(F.col("total_revenue"))))
+    dec_sum = dsum("total_revenue")
     return kept.groupBy("product").agg(
         F.max("n").alias("n_days"),
         F.count("*").cast("bigint").alias("n_kept"),
@@ -2118,7 +2113,7 @@ def q_supplier_region_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_acctbal").desc(), F.col("s_suppkey").asc()
     )
     ranked = s.withColumn("rk", F.row_number().over(rw))
-    dec_sum = _cents_sum_to_double(F.sum(_cents(F.col("s_acctbal"))))
+    dec_sum = dsum("s_acctbal")
     return ranked.groupBy("region").agg(
         F.countDistinct("nation").cast("bigint").alias("n_nations"),
         F.count("*").cast("bigint").alias("n_suppliers"),
@@ -2179,9 +2174,7 @@ def q_twap_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dt_us"),
     ).filter(F.col("dt_us").isNotNull())
     contrib = F.round(F.col("value") * (F.col("dt_us") / 1000000.0), 6)
-    num = (
-        F.sum(contrib.cast("decimal(28,6)")).cast("string").cast("double")
-    )
+    num = dsum(contrib, dec="decimal(28,6)")
     den_us = F.sum("dt_us").cast("bigint")
     return seq.groupBy("event_type", F.date_format("d", "yyyy-MM-dd").alias("date")).agg(
         F.count("*").cast("bigint").alias("n_segments"),
@@ -2247,13 +2240,13 @@ def q_top_movers_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
     weekly = daily.groupBy(
         "product", F.date_trunc("week", "date").cast("date").alias("week_start")
     ).agg(
-        F.sum(_cents(F.col("total_revenue"))).alias("rev_c")
+        F.sum(cents(F.col("total_revenue"))).alias("rev_c")
     )
     pw = Window.partitionBy("product").orderBy("week_start")
     shifted = weekly.select(
         "product", "week_start",
-        _cents_sum_to_double(F.col("rev_c")).alias("rev"),
-        _cents_sum_to_double(F.lag("rev_c").over(pw)).alias("prev_rev"),
+        cents_to_double(F.col("rev_c")).alias("rev"),
+        cents_to_double(F.lag("rev_c").over(pw)).alias("prev_rev"),
         (F.date_sub(F.col("week_start"), 7) == F.lag("week_start").over(pw))
         .alias("contiguous"),
     )
@@ -2334,8 +2327,8 @@ def q_new_vs_returning_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.trunc("o_orderdate", "MM") == first_m).alias("is_new"),
         "o_totalprice",
     )
-    dec = lambda cond: _cents_sum_to_double(  # noqa: E731
-        F.sum(F.when(cond, _cents(F.col("o_totalprice"))).otherwise(F.lit(0)))
+    dec = lambda cond: cents_to_double(  # noqa: E731
+        F.sum(F.when(cond, cents(F.col("o_totalprice"))).otherwise(F.lit(0)))
     )
     return tagged.groupBy(F.date_format("m", "yyyy-MM").alias("month")).agg(
         F.countDistinct(F.when(F.col("is_new"), F.col("o_custkey")))
@@ -2546,15 +2539,16 @@ def q_concentration_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec0 = F.lit(0).cast("decimal(18,2)")
     g = ranked.agg(
         F.max("n_products").alias("n"),
-        F.sum("r").cast("string").cast("double").alias("total"),
-        F.sum(F.col("i") * F.col("r")).cast("string").cast("double")
-        .alias("weighted"),
-        F.sum(F.col("r").cast("decimal(38,4)") * F.col("r"))
-        .cast("string").cast("double").alias("sum_sq"),
-        F.sum(F.when(F.col("i") > F.col("n_products") - 1, F.col("r"))
-              .otherwise(dec0)).cast("string").cast("double").alias("top1"),
-        F.sum(F.when(F.col("i") > F.col("n_products") - 5, F.col("r"))
-              .otherwise(dec0)).cast("string").cast("double").alias("top5"),
+        dec_to_double(F.sum("r")).alias("total"),
+        dec_to_double(F.sum(F.col("i") * F.col("r"))).alias("weighted"),
+        dec_to_double(F.sum(F.col("r").cast("decimal(38,4)") * F.col("r")))
+        .alias("sum_sq"),
+        dec_to_double(F.sum(
+            F.when(F.col("i") > F.col("n_products") - 1, F.col("r"))
+            .otherwise(dec0))).alias("top1"),
+        dec_to_double(F.sum(
+            F.when(F.col("i") > F.col("n_products") - 5, F.col("r"))
+            .otherwise(dec0))).alias("top5"),
     )
     return g.select(
         F.col("n").alias("n_products"),
@@ -2588,8 +2582,8 @@ def q_concentration_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(CAST(total_revenue AS DECIMAL(18,2))) * 100
                   AS BIGINT) AS tot_c,
              {oracle_dsum('total_revenue', 'sx')},
-             {oracle_dsum_as('total_revenue * total_revenue',
-                             'DECIMAL(28,10)', 'sxx')}
+             {oracle_dsum('total_revenue * total_revenue',
+                          'sxx', dec='DECIMAL(28,10)')}
       FROM daily GROUP BY 1
     )
     SELECT c.product, strftime(c.date, '%Y-%m-%d') AS date,
@@ -2641,7 +2635,7 @@ def q_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(F.col("total_revenue").cast(DEC)) * 100)
         .cast("bigint").alias("tot_c"),
         dsum("total_revenue", "sx"),
-        dsum_as("total_revenue * total_revenue", DEC10, "sxx"),
+        dsum("total_revenue * total_revenue", "sxx", dec="decimal(28,10)"),
     )
     j = cum.join(F.broadcast(tot), "product")
     num = F.col("n") * F.col("cum_c") - F.col("t") * F.col("tot_c")

@@ -33,9 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.money import (
-    _cents, _cents_sum_to_double, dsum_as, oracle_dsum_as,
-)
+from ..functions.money import cents, dec_to_double, dsum, oracle_dsum
 from ..operators.salesviews import sale_lines
 from .registry import register
 
@@ -51,10 +49,10 @@ _Q3_DATE = "1998-07-01"
     "tpch_q3_shipping_priority",
     oracle=f"""
     SELECT l.l_orderkey,
-           {oracle_dsum_as(
+           {oracle_dsum(
                "CAST(l.l_extendedprice AS DECIMAL(18,2))"
                " * (1 - CAST(l.l_discount AS DECIMAL(4,2)))",
-               "decimal(38,4)", "revenue")},
+               "revenue", dec="decimal(38,4)")},
            strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
            o.o_orderpriority AS orderpriority
     FROM customer c
@@ -101,7 +99,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("orderpriority"),
         )
         .agg(
-            F.sum(rev).cast("decimal(38,4)").cast("string").cast("double")
+            dec_to_double(F.sum(rev).cast("decimal(38,4)"))
             .alias("revenue")
         )
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
@@ -126,8 +124,8 @@ _Q17_BRAND = "Brand#4"
       FROM lineitem GROUP BY 1
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_small_lines,
-           {oracle_dsum_as("CAST(l.l_extendedprice AS DECIMAL(18,2))",
-                           "decimal(38,2)", "small_qty_revenue")},
+           {oracle_dsum("CAST(l.l_extendedprice AS DECIMAL(18,2))",
+                        "small_qty_revenue", dec="decimal(38,2)")},
            CAST(CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)))
                           AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) / 7.0
              AS avg_yearly
@@ -168,11 +166,8 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").cast("bigint").alias("n_small_lines"),
-            _cents_sum_to_double(F.sum(_cents(F.col("l_extendedprice"))))
-            .alias("small_qty_revenue"),
-            (_cents_sum_to_double(F.sum(_cents(F.col("l_extendedprice"))))
-             / 7.0)
-            .alias("avg_yearly"),
+            dsum("l_extendedprice", "small_qty_revenue"),
+            (dsum("l_extendedprice") / 7.0).alias("avg_yearly"),
         )
     )
 
@@ -400,12 +395,12 @@ def q_welch_ttest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.col("n").alias("n1"),
         (F.col("tn") - F.col("n")).alias("n2"),
-        F.col("s").cast("string").cast("double").alias("s1"),
-        F.col("ss").cast("string").cast("double").alias("ss1"),
-        (F.col("ts") - F.col("s")).cast("decimal(38,2)")
-        .cast("string").cast("double").alias("s2"),
-        (F.col("tss") - F.col("ss")).cast("decimal(38,4)")
-        .cast("string").cast("double").alias("ss2"),
+        dec_to_double(F.col("s")).alias("s1"),
+        dec_to_double(F.col("ss")).alias("ss1"),
+        dec_to_double((F.col("ts") - F.col("s")).cast("decimal(38,2)"))
+        .alias("s2"),
+        dec_to_double((F.col("tss") - F.col("ss")).cast("decimal(38,4)"))
+        .alias("ss2"),
     )
     return pre.selectExpr(*_WELCH_FINAL).orderBy("c_mktsegment")
 
@@ -736,11 +731,11 @@ _ACF_FINAL = [
     ), moments AS (
       SELECT product, lag,
              CAST(COUNT(*) AS BIGINT) AS n,
-             {oracle_dsum_as("rev", "decimal(38,2)", "sx")},
-             {oracle_dsum_as("rev_lag", "decimal(38,2)", "sy")},
-             {oracle_dsum_as("rev * rev", "decimal(38,4)", "sxx")},
-             {oracle_dsum_as("rev_lag * rev_lag", "decimal(38,4)", "syy")},
-             {oracle_dsum_as("rev * rev_lag", "decimal(38,4)", "sxy")}
+             {oracle_dsum("rev", "sx", dec="decimal(38,2)")},
+             {oracle_dsum("rev_lag", "sy", dec="decimal(38,2)")},
+             {oracle_dsum("rev * rev", "sxx", dec="decimal(38,4)")},
+             {oracle_dsum("rev_lag * rev_lag", "syy", dec="decimal(38,4)")},
+             {oracle_dsum("rev * rev_lag", "sxy", dec="decimal(38,4)")}
       FROM pairs GROUP BY 1, 2
     )
     SELECT {", ".join(_ACF_FINAL)}
@@ -789,11 +784,11 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.col("d.rev").alias("rev"), F.col("g.rev_lag").alias("rev_lag"))
     moments = pairs.groupBy("product", "lag").agg(
         F.count("*").cast("bigint").alias("n"),
-        dsum_as("rev", "decimal(38,2)", "sx"),
-        dsum_as("rev_lag", "decimal(38,2)", "sy"),
-        dsum_as("rev * rev", "decimal(38,4)", "sxx"),
-        dsum_as("rev_lag * rev_lag", "decimal(38,4)", "syy"),
-        dsum_as("rev * rev_lag", "decimal(38,4)", "sxy"),
+        dsum("rev", "sx", dec="decimal(38,2)"),
+        dsum("rev_lag", "sy", dec="decimal(38,2)"),
+        dsum("rev * rev", "sxx", dec="decimal(38,4)"),
+        dsum("rev_lag * rev_lag", "syy", dec="decimal(38,4)"),
+        dsum("rev * rev_lag", "sxy", dec="decimal(38,4)"),
     )
     return (
         moments.where(F.col("n") >= _ACF_MIN_PAIRS)
@@ -815,10 +810,10 @@ _Q5_HI = "1997-01-01"
     "tpch_q5_local_supplier_volume",
     oracle=f"""
     SELECT n_name,
-           {oracle_dsum_as(
+           {oracle_dsum(
                "CAST(l_extendedprice AS DECIMAL(18,2))"
                " * (1 - CAST(l_discount AS DECIMAL(4,2)))",
-               "decimal(38,4)", "revenue")}
+               "revenue", dec="decimal(38,4)")}
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -874,7 +869,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
         .groupBy("n_name")
-        .agg(F.sum(rev).cast("decimal(38,4)").cast("string").cast("double")
+        .agg(dec_to_double(F.sum(rev).cast("decimal(38,4)"))
              .alias("revenue"))
         .orderBy(F.col("revenue").desc(), "n_name")
     )
@@ -982,7 +977,7 @@ _Q22_CUTOFF = "2000-01-01"
     )
     SELECT n_name,
            CAST(COUNT(*) AS BIGINT) AS numcust,
-           {oracle_dsum_as("c_acctbal", "decimal(18,2)", "totacctbal")}
+           {oracle_dsum("c_acctbal", "totacctbal", dec="decimal(18,2)")}
     FROM customer
     CROSS JOIN thresh
     JOIN nation ON c_nationkey = n_nationkey
@@ -1021,12 +1016,12 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the long sum riding codegen instead of the decimal
             # accumulator. Headroom: cents*npos ≤ ~1e6 * 1.5e10 at a
             # true 100 TB — well inside BIGINT.
-            F.sum(_cents(F.col("c_acctbal"))).alias("total"),
+            F.sum(cents(F.col("c_acctbal"))).alias("total"),
         )
     )
     rich = (
         cust.crossJoin(F.broadcast(thresh))
-        .where(_cents(F.col("c_acctbal")) * F.col("npos")
+        .where(cents(F.col("c_acctbal")) * F.col("npos")
                > F.col("total"))
     )
     recent = (
@@ -1042,7 +1037,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count("*").cast("bigint").alias("numcust"),
-            dsum_as("c_acctbal", "decimal(18,2)", "totacctbal"),
+            dsum("c_acctbal", "totacctbal", dec="decimal(18,2)"),
         )
         .orderBy("n_name")
     )
@@ -1072,19 +1067,19 @@ _Q1_FINAL = [
     oracle=f"""
     WITH sums AS (
       SELECT l_returnflag, l_linestatus,
-             {oracle_dsum_as("l_quantity", "decimal(18,2)", "sum_qty")},
-             {oracle_dsum_as("l_extendedprice", "decimal(18,2)",
-                             "sum_base_price")},
-             {oracle_dsum_as(
+             {oracle_dsum("l_quantity", "sum_qty", dec="decimal(18,2)")},
+             {oracle_dsum("l_extendedprice", "sum_base_price",
+                          dec="decimal(18,2)")},
+             {oracle_dsum(
                  "CAST(l_extendedprice AS DECIMAL(18,2))"
                  " * (1 - CAST(l_discount AS DECIMAL(4,2)))",
-                 "decimal(38,4)", "sum_disc_price")},
-             {oracle_dsum_as(
+                 "sum_disc_price", dec="decimal(38,4)")},
+             {oracle_dsum(
                  "CAST(l_extendedprice AS DECIMAL(18,2))"
                  " * (1 - CAST(l_discount AS DECIMAL(4,2)))"
                  " * (1 + CAST(l_tax AS DECIMAL(4,2)))",
-                 "decimal(38,6)", "sum_charge")},
-             {oracle_dsum_as("l_discount", "decimal(4,2)", "sum_disc")},
+                 "sum_charge", dec="decimal(38,6)")},
+             {oracle_dsum("l_discount", "sum_disc", dec="decimal(4,2)")},
              CAST(COUNT(*) AS BIGINT) AS count_order
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '{_Q1_CUTOFF}'
@@ -1115,12 +1110,12 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc_price = ("CAST(l_extendedprice AS DECIMAL(18,2))"
                   " * (1 - CAST(l_discount AS DECIMAL(4,2)))")
     sums = li.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum_as("l_quantity", "decimal(18,2)", "sum_qty"),
-        dsum_as("l_extendedprice", "decimal(18,2)", "sum_base_price"),
-        dsum_as(disc_price, "decimal(38,4)", "sum_disc_price"),
-        dsum_as(disc_price + " * (1 + CAST(l_tax AS DECIMAL(4,2)))",
-                "decimal(38,6)", "sum_charge"),
-        dsum_as("l_discount", "decimal(4,2)", "sum_disc"),
+        dsum("l_quantity", "sum_qty", dec="decimal(18,2)"),
+        dsum("l_extendedprice", "sum_base_price", dec="decimal(18,2)"),
+        dsum(disc_price, "sum_disc_price", dec="decimal(38,4)"),
+        dsum(disc_price + " * (1 + CAST(l_tax AS DECIMAL(4,2)))",
+             "sum_charge", dec="decimal(38,6)"),
+        dsum("l_discount", "sum_disc", dec="decimal(4,2)"),
         F.count("*").cast("bigint").alias("count_order"),
     )
     return (
@@ -1196,16 +1191,16 @@ _Q14_FINAL = ["100.0 * promo_rev / total_rev AS promo_revenue_pct",
     "tpch_q14_promo_revenue",
     oracle=f"""
     WITH sums AS (
-      SELECT {oracle_dsum_as(
+      SELECT {oracle_dsum(
                  "CASE WHEN p_type = 'PROMO' THEN"
                  " CAST(l_extendedprice AS DECIMAL(18,2))"
                  " * (1 - CAST(l_discount AS DECIMAL(4,2)))"
                  " ELSE 0 END",
-                 "decimal(38,4)", "promo_rev")},
-             {oracle_dsum_as(
+                 "promo_rev", dec="decimal(38,4)")},
+             {oracle_dsum(
                  "CAST(l_extendedprice AS DECIMAL(18,2))"
                  " * (1 - CAST(l_discount AS DECIMAL(4,2)))",
-                 "decimal(38,4)", "total_rev")}
+                 "total_rev", dec="decimal(38,4)")}
       FROM lineitem
       JOIN part ON l_partkey = p_partkey
       JOIN orders ON l_orderkey = o_orderkey
@@ -1240,9 +1235,9 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc_price = ("CAST(l_extendedprice AS DECIMAL(18,2))"
                   " * (1 - CAST(l_discount AS DECIMAL(4,2)))")
     sums = li.agg(
-        dsum_as(f"CASE WHEN p_type = 'PROMO' THEN {disc_price} ELSE 0 END",
-                "decimal(38,4)", "promo_rev"),
-        dsum_as(disc_price, "decimal(38,4)", "total_rev"),
+        dsum(f"CASE WHEN p_type = 'PROMO' THEN {disc_price} ELSE 0 END",
+             "promo_rev", dec="decimal(38,4)"),
+        dsum(disc_price, "total_rev", dec="decimal(38,4)"),
     )
     return sums.selectExpr(*_Q14_FINAL)
 
@@ -1321,10 +1316,10 @@ _Q6_HI = "1998-01-01"
 @register(
     "tpch_q6_forecast_revenue",
     oracle=f"""
-    SELECT {oracle_dsum_as(
+    SELECT {oracle_dsum(
                "CAST(l_extendedprice AS DECIMAL(18,2))"
                " * CAST(l_discount AS DECIMAL(4,2))",
-               "decimal(38,4)", "revenue")},
+               "revenue", dec="decimal(38,4)")},
            CAST(COUNT(*) AS BIGINT) AS n_lines
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '{_Q6_LO}'
@@ -1354,9 +1349,9 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") >= 0.05) & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24))
     return li.agg(
-        dsum_as("CAST(l_extendedprice AS DECIMAL(18,2))"
-                " * CAST(l_discount AS DECIMAL(4,2))",
-                "decimal(38,4)", "revenue"),
+        dsum("CAST(l_extendedprice AS DECIMAL(18,2))"
+             " * CAST(l_discount AS DECIMAL(4,2))",
+             "revenue", dec="decimal(38,4)"),
         F.count("*").cast("bigint").alias("n_lines"),
     )
 
@@ -1375,10 +1370,10 @@ _Q7_NATION_B = "NATION_7"
     SELECT n1.n_name AS supp_nation,
            n2.n_name AS cust_nation,
            CAST(EXTRACT(year FROM l_shipdate) AS INT) AS l_year,
-           {oracle_dsum_as(
+           {oracle_dsum(
                "CAST(l_extendedprice AS DECIMAL(18,2))"
                " * (1 - CAST(l_discount AS DECIMAL(4,2)))",
-               "decimal(38,4)", "revenue")}
+               "revenue", dec="decimal(38,4)")}
     FROM supplier
     JOIN lineitem ON s_suppkey = l_suppkey
     JOIN orders   ON o_orderkey = l_orderkey
@@ -1437,7 +1432,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation",
             F.year("l_shipdate").cast("int").alias("l_year"),
         )
-        .agg(F.sum(rev).cast("decimal(38,4)").cast("string").cast("double")
+        .agg(dec_to_double(F.sum(rev).cast("decimal(38,4)"))
              .alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
@@ -1456,10 +1451,10 @@ _Q10_TOPK = 20
     "tpch_q10_returned_items",
     oracle=f"""
     SELECT c_custkey, c_name, c_acctbal, n_name,
-           {oracle_dsum_as(
+           {oracle_dsum(
                "CAST(l_extendedprice AS DECIMAL(18,2))"
                " * (1 - CAST(l_discount AS DECIMAL(4,2)))",
-               "decimal(38,4)", "revenue")}
+               "revenue", dec="decimal(38,4)")}
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -1506,7 +1501,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_cust.join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .select(
             "c_custkey", "c_name", "c_acctbal", "n_name",
-            F.col("rev_dec").cast("string").cast("double").alias("revenue"),
+            dec_to_double(F.col("rev_dec")).alias("revenue"),
         )
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(_Q10_TOPK)
@@ -1589,11 +1584,11 @@ _Q8_FINAL = ["o_year",
     oracle=f"""
     WITH sums AS (
       SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-             {oracle_dsum_as(
+             {oracle_dsum(
                  f"CASE WHEN n2.n_name = '{_Q8_NATION}'"
                  f" THEN {_Q8_VOL} ELSE 0 END",
-                 "decimal(38,4)", "nation_vol")},
-             {oracle_dsum_as(_Q8_VOL, "decimal(38,4)", "total_vol")}
+                 "nation_vol", dec="decimal(38,4)")},
+             {oracle_dsum(_Q8_VOL, "total_vol", dec="decimal(38,4)")}
       FROM part
       JOIN lineitem ON p_partkey = l_partkey
       JOIN supplier ON s_suppkey = l_suppkey
@@ -1663,10 +1658,10 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         lines.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
         .agg(
-            dsum_as(f"CASE WHEN supp_nation = '{_Q8_NATION}'"
-                    f" THEN {_Q8_VOL} ELSE 0 END",
-                    "decimal(38,4)", "nation_vol"),
-            dsum_as(_Q8_VOL, "decimal(38,4)", "total_vol"),
+            dsum(f"CASE WHEN supp_nation = '{_Q8_NATION}'"
+                 f" THEN {_Q8_VOL} ELSE 0 END",
+                 "nation_vol", dec="decimal(38,4)"),
+            dsum(_Q8_VOL, "total_vol", dec="decimal(38,4)"),
         )
     )
     return sums.selectExpr(*_Q8_FINAL).orderBy("o_year")
@@ -1694,7 +1689,7 @@ _Q9_PROFIT = ("CAST(l_extendedprice AS DECIMAL(18,2))"
     oracle=f"""
     SELECT n_name AS nation,
            CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-           {oracle_dsum_as(_Q9_PROFIT, "decimal(38,4)", "sum_profit")}
+           {oracle_dsum(_Q9_PROFIT, "sum_profit", dec="decimal(38,4)")}
     FROM part
     JOIN lineitem ON p_partkey = l_partkey
     JOIN supplier ON s_suppkey = l_suppkey
@@ -1740,7 +1735,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         lines.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("nation", F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(dsum_as(_Q9_PROFIT, "decimal(38,4)", "sum_profit"))
+        .agg(dsum(_Q9_PROFIT, "sum_profit", dec="decimal(38,4)"))
         .orderBy("nation", F.col("o_year").desc())
     )
 
@@ -1804,7 +1799,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(table(spark, sf_dir, "supplier")),
               F.col("supplier_no") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name",
-                F.col("rev_dec").cast("string").cast("double")
+                dec_to_double(F.col("rev_dec"))
                 .alias("total_revenue"))
         .orderBy("s_suppkey")
     )
@@ -1829,10 +1824,10 @@ _Q19_COND = " OR ".join(
 @register(
     "tpch_q19_banded_revenue",
     oracle=f"""
-    SELECT {oracle_dsum_as(
+    SELECT {oracle_dsum(
                "CAST(l_extendedprice AS DECIMAL(18,2))"
                " * (1 - CAST(l_discount AS DECIMAL(4,2)))",
-               "decimal(38,4)", "revenue")},
+               "revenue", dec="decimal(38,4)")},
            CAST(COUNT(*) AS BIGINT) AS n_lines
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
@@ -1860,9 +1855,9 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(part),
         (F.col("l_partkey") == F.col("p_partkey")) & F.expr(_Q19_COND))
     return joined.agg(
-        dsum_as("CAST(l_extendedprice AS DECIMAL(18,2))"
-                " * (1 - CAST(l_discount AS DECIMAL(4,2)))",
-                "decimal(38,4)", "revenue"),
+        dsum("CAST(l_extendedprice AS DECIMAL(18,2))"
+             " * (1 - CAST(l_discount AS DECIMAL(4,2)))",
+             "revenue", dec="decimal(38,4)"),
         F.count("*").cast("bigint").alias("n_lines"),
     )
 
@@ -2079,7 +2074,7 @@ def q_seasonal_decompose_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "product",
             F.expr("year(sale_ts) * 12 + month(sale_ts)")
             .cast("int").alias("x"))
-        .agg(F.sum(_cents(F.col("revenue"))).alias("rev_c"))
+        .agg(F.sum(cents(F.col("revenue"))).alias("rev_c"))
     )
     w = Window.partitionBy("product").orderBy("x")
     w13 = w.rowsBetween(-6, 6)
@@ -2471,7 +2466,7 @@ def q_ols_weekend_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("d"))
-        .agg(F.sum(_cents(F.col("o_totalprice"))).alias("y"))
+        .agg(F.sum(cents(F.col("o_totalprice"))).alias("y"))
     )
     xy = daily.select(
         F.datediff(F.col("d"), F.lit(_OLS2_EPOCH).cast("date"))
@@ -2748,9 +2743,9 @@ def q_cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.coalesce("c_custkey", "k").alias("custkey"),
         F.when(F.col("op").isin("U", "I"),
-               F.col("new_bal").cast("string").cast("double"))
-        .otherwise(F.col("c_acctbal").cast("decimal(18,2)")
-                   .cast("string").cast("double")).alias("acctbal"),
+               dec_to_double(F.col("new_bal")))
+        .otherwise(dec_to_double(F.col("c_acctbal").cast("decimal(18,2)")))
+        .alias("acctbal"),
         F.when(F.col("op").isin("U", "I"), F.col("new_seg"))
         .otherwise(F.col("c_mktsegment")).alias("mktsegment"),
         F.coalesce("op", F.lit("K")).alias("applied_op"),
@@ -2840,7 +2835,7 @@ def q_conformal_forecast_interval(spark: SparkSession, sf_dir: str) -> DataFrame
     daily = (
         sale_lines(spark, sf_dir)
         .groupBy("product", F.col("sale_ts").cast("date").alias("d"))
-        .agg(F.sum(_cents(F.col("revenue"))).alias("y"))
+        .agg(F.sum(cents(F.col("revenue"))).alias("y"))
     )
     b = daily.select(
         F.col("product").alias("bp"),
@@ -3154,8 +3149,8 @@ def q_price_elasticity_loglog(spark: SparkSession, sf_dir: str) -> DataFrame:
         sale_lines(spark, sf_dir)
         .groupBy("product", F.col("sale_ts").cast("date").alias("d"))
         .agg(
-            F.sum(_cents(F.col("revenue"))).alias("rev_c"),
-            F.sum(_cents(F.col("quantity"))).alias("qty_c"),
+            F.sum(cents(F.col("revenue"))).alias("rev_c"),
+            F.sum(cents(F.col("quantity"))).alias("qty_c"),
         )
     )
     obs = daily.select(
@@ -3253,19 +3248,19 @@ def _anova_final(st: str) -> list[str]:
 )
 def q_anova_f_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
-    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast(
+    price_c = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast(
         "decimal(18,0)")
     aggs = [
         F.count("*").cast("bigint").alias("n"),
-        F.sum(cents).alias("s"),
-        F.sum(cents * cents).alias("ss"),
+        F.sum(price_c).alias("s"),
+        F.sum(price_c * price_c).alias("ss"),
     ]
     for i, g in enumerate(_ANOVA_GROUPS):
         hit = F.col("o_orderpriority") == g
         aggs.append(
             F.sum(F.when(hit, 1).otherwise(0)).cast("bigint").alias(f"n_{i}"))
         aggs.append(
-            F.sum(F.when(hit, cents).otherwise(F.lit(0).cast("decimal(18,0)")))
+            F.sum(F.when(hit, price_c).otherwise(F.lit(0).cast("decimal(18,0)")))
             .alias(f"s_{i}"))
     return o.agg(*aggs).selectExpr(*_anova_final("STRING"))
 
@@ -3535,8 +3530,8 @@ _PVM_Y2 = 1998
 def q_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sl = sale_lines(spark, sf_dir)
     yr = F.year("sale_ts")
-    rev = _cents(F.col("revenue"))
-    qty = _cents(F.col("quantity"))
+    rev = cents(F.col("revenue"))
+    qty = cents(F.col("quantity"))
     m = sl.groupBy("product").agg(
         F.coalesce(F.sum(F.when(yr == _PVM_Y1, rev)), F.lit(0))
         .cast("bigint").alias("rev1"),
@@ -4470,14 +4465,14 @@ _DW_FINAL = (
     ), m AS (
       SELECT brand,
              CAST(COUNT(*) AS DOUBLE) AS n,
-             {oracle_dsum_as('x', 'decimal(38,0)', 'sx')},
-             {oracle_dsum_as('y', 'decimal(38,0)', 'sy')},
-             {oracle_dsum_as('x * x', 'decimal(38,0)', 'sxx')},
-             {oracle_dsum_as('CAST(y AS DECIMAL(38,0)) * y', 'decimal(38,0)', 'syy')},
-             {oracle_dsum_as('CAST(x AS DECIMAL(38,0)) * y', 'decimal(38,0)', 'sxy')},
-             {oracle_dsum_as('COALESCE(CAST(dx AS DECIMAL(38,0)) * dx, 0)', 'decimal(38,0)', 'sdx2')},
-             {oracle_dsum_as('COALESCE(CAST(dy AS DECIMAL(38,0)) * dy, 0)', 'decimal(38,0)', 'sdy2')},
-             {oracle_dsum_as('COALESCE(CAST(dx AS DECIMAL(38,0)) * dy, 0)', 'decimal(38,0)', 'sdxdy')}
+             {oracle_dsum('x', 'sx', dec='decimal(38,0)')},
+             {oracle_dsum('y', 'sy', dec='decimal(38,0)')},
+             {oracle_dsum('x * x', 'sxx', dec='decimal(38,0)')},
+             {oracle_dsum('CAST(y AS DECIMAL(38,0)) * y', 'syy', dec='decimal(38,0)')},
+             {oracle_dsum('CAST(x AS DECIMAL(38,0)) * y', 'sxy', dec='decimal(38,0)')},
+             {oracle_dsum('COALESCE(CAST(dx AS DECIMAL(38,0)) * dx, 0)', 'sdx2', dec='decimal(38,0)')},
+             {oracle_dsum('COALESCE(CAST(dy AS DECIMAL(38,0)) * dy, 0)', 'sdy2', dec='decimal(38,0)')},
+             {oracle_dsum('COALESCE(CAST(dx AS DECIMAL(38,0)) * dy, 0)', 'sdxdy', dec='decimal(38,0)')}
       FROM lagged GROUP BY 1
     )
     SELECT brand, CAST(n AS BIGINT) AS n_days, {_DW_B} AS slope,
@@ -4520,14 +4515,14 @@ def q_durbin_watson_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = lagged.groupBy("brand").agg(
         F.count("*").cast("double").alias("n"),
-        dsum_as("x", "decimal(38,0)", "sx"),
-        dsum_as("y", "decimal(38,0)", "sy"),
-        dsum_as("x * x", "decimal(38,0)", "sxx"),
-        dsum_as("CAST(y AS DECIMAL(38,0)) * y", "decimal(38,0)", "syy"),
-        dsum_as("CAST(x AS DECIMAL(38,0)) * y", "decimal(38,0)", "sxy"),
-        dsum_as("COALESCE(CAST(dx AS DECIMAL(38,0)) * dx, 0)", "decimal(38,0)", "sdx2"),
-        dsum_as("COALESCE(CAST(dy AS DECIMAL(38,0)) * dy, 0)", "decimal(38,0)", "sdy2"),
-        dsum_as("COALESCE(CAST(dx AS DECIMAL(38,0)) * dy, 0)", "decimal(38,0)", "sdxdy"),
+        dsum("x", "sx", dec="decimal(38,0)"),
+        dsum("y", "sy", dec="decimal(38,0)"),
+        dsum("x * x", "sxx", dec="decimal(38,0)"),
+        dsum("CAST(y AS DECIMAL(38,0)) * y", "syy", dec="decimal(38,0)"),
+        dsum("CAST(x AS DECIMAL(38,0)) * y", "sxy", dec="decimal(38,0)"),
+        dsum("COALESCE(CAST(dx AS DECIMAL(38,0)) * dx, 0)", "sdx2", dec="decimal(38,0)"),
+        dsum("COALESCE(CAST(dy AS DECIMAL(38,0)) * dy, 0)", "sdy2", dec="decimal(38,0)"),
+        dsum("COALESCE(CAST(dx AS DECIMAL(38,0)) * dy, 0)", "sdxdy", dec="decimal(38,0)"),
     )
     return (
         m.selectExpr("brand", "CAST(n AS BIGINT) AS n_days",

@@ -18,9 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import table, table_parallel
-from ..functions.money import (
-    _cents, _cents_sum_to_double, dsum_expr, oracle_dsum,
-)
+from ..functions.money import cents, dsum, oracle_dsum
 from ..session import truncate_lineage
 from .registry import register
 
@@ -463,7 +461,7 @@ def q_label_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_dim = ex.groupBy("label", "pos").agg(
         (
-            F.sum(F.col("val").cast("decimal(18,6)")).cast("string").cast("double")
+            dsum(F.col("val"), dec="decimal(18,6)")
             / F.count("*")
         ).alias("cmean")
     )
@@ -489,7 +487,7 @@ def q_label_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_vecs"),
         F.first("cnorm").alias("centroid_norm"),
         F.round(
-            F.sum(F.col("cos").cast("decimal(18,6)")).cast("string").cast("double")
+            dsum(F.col("cos"), dec="decimal(18,6)")
             / F.count("*"),
             6,
         ).alias("avg_cos"),
@@ -959,7 +957,7 @@ def q_unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.log(F.col("tf").cast("double") / F.col("n_tokens")), 6).alias("lp"),
         )
     )
-    dec_sum = F.sum(F.col("lp").cast("decimal(18,6)")).cast("string").cast("double")
+    dec_sum = dsum(F.col("lp"), dec="decimal(18,6)")
     return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         dec_sum.alias("sum_logprob"),
@@ -1036,16 +1034,16 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BIGINT-cents conditional sums (r13): null iff no matching rows
     # (same as the decimal form) and the <> compare is the same exact
     # inequality scaled by 100.
-    old_dec = F.sum(_cents(F.expr(
+    old_dec = F.sum(cents(F.expr(
         "CASE WHEN o_orderdate < TIMESTAMP '1997-01-01' THEN o_totalprice END"
     )))
-    new_dec = F.sum(_cents(F.col("o_totalprice")))
+    new_dec = F.sum(cents(F.col("o_totalprice")))
     return o.groupBy("o_custkey").agg(
-        dsum_expr(
+        dsum(
             "CASE WHEN o_orderdate < TIMESTAMP '1997-01-01' THEN o_totalprice END",
             "old_spend",
         ),
-        dsum_expr("o_totalprice", "new_spend"),
+        dsum("o_totalprice", "new_spend"),
         F.when(old_dec.isNull(), "inserted")
         .when(old_dec != new_dec, "updated")
         .otherwise("unchanged")
@@ -1179,7 +1177,7 @@ def q_bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lp"),
         )
     )
-    dec_sum = F.sum(F.col("lp").cast("decimal(18,6)")).cast("string").cast("double")
+    dec_sum = dsum(F.col("lp"), dec="decimal(18,6)")
     return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
         dec_sum.alias("sum_logprob"),
@@ -1361,14 +1359,14 @@ def q_quality_blend_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unigram-LM subplan (8 corpus scans measured). The frame is
     # narrow (doc_id + 3 doubles) — materialize once.
     feats = truncate_lineage(feats)
-    dec6 = lambda c: F.sum(F.col(c).cast("decimal(18,6)")).cast("string").cast("double")  # noqa: E731
-    dec12 = lambda c: F.sum((F.col(c) * F.col(c)).cast("decimal(30,12)")).cast("string").cast("double")  # noqa: E731
     stats = feats.agg(
         F.count("*").alias("n"),
         F.sum("n_words").cast("double").alias("sx_w"),
         F.sum(F.col("n_words") * F.col("n_words")).cast("double").alias("sxx_w"),
-        dec6("stop_ratio").alias("sx_s"), dec12("stop_ratio").alias("sxx_s"),
-        dec6("avg_logprob").alias("sx_l"), dec12("avg_logprob").alias("sxx_l"),
+        dsum("stop_ratio", "sx_s", dec="decimal(18,6)"),
+        dsum("stop_ratio * stop_ratio", "sxx_s", dec="decimal(30,12)"),
+        dsum("avg_logprob", "sx_l", dec="decimal(18,6)"),
+        dsum("avg_logprob * avg_logprob", "sxx_l", dec="decimal(30,12)"),
     )
 
     def z(x: str, sx: str, sxx: str) -> F.Column:
@@ -1504,7 +1502,7 @@ def q_split_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def fold(c: str) -> F.Column:
-        return F.sum(F.col(c).cast("decimal(28,6)")).cast("string").cast("double")
+        return dsum(F.col(c), dec="decimal(28,6)")
 
     g = terms.agg(
         F.count("*").cast("bigint").alias("v"),
@@ -1928,8 +1926,7 @@ def q_nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     folded = grid.groupBy("doc_id", "actual_lang", "lang").agg(
-        F.sum(F.col("term").cast("decimal(28,6)"))
-        .cast("string").cast("double").alias("s_like"),
+        dsum(F.col("term"), dec="decimal(28,6)").alias("s_like"),
         # grid has exactly one row per (token, language), so this group
         # count IS the document's token count — no separate docn
         # aggregation (which re-embedded the tokenize subtree)

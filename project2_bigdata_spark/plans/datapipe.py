@@ -27,6 +27,7 @@ from ..operators.textstats import (
     STOPWORDS, documents_with_stats, fingerprint, token_count_bpeish,
 )
 from ..catalog import table, table_parallel
+from ..functions.money import dsum
 from ..session import truncate_lineage
 from .registry import register
 
@@ -1334,10 +1335,9 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(embedding, v -> round(cast(v as double), 6))")
         ).alias("pos0", "val")
     )
-    sx = F.sum(F.col("val").cast("decimal(18,6)")).cast("string").cast("double")
+    sx = dsum(F.col("val"), dec="decimal(18,6)")
     sxx = (
-        F.sum((F.col("val") * F.col("val")).cast("decimal(30,12)"))
-        .cast("string").cast("double")
+        dsum(F.col("val") * F.col("val"), dec="decimal(30,12)")
     )
     n = F.count("*")
     return (
@@ -1580,7 +1580,7 @@ def q_matryoshka_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k in (8, 16, 32)
     ]))
     per_vec = e.select("label", rows.alias("e")).select("label", "e.k", "e.r")
-    dec_sum = F.sum(F.col("r").cast("decimal(18,6)")).cast("string").cast("double")
+    dec_sum = dsum(F.col("r"), dec="decimal(18,6)")
     return per_vec.groupBy("label", "k").agg(
         F.count("*").cast("bigint").alias("n_vecs"),
         F.round(dec_sum / F.count("*"), 6).alias("mean_energy"),

@@ -177,7 +177,8 @@ def q_grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark_ = spark
     from ..catalog import table as _t
 
-    # SQL twin of dsum's BIGINT-cents path (r13) — see functions.money
+    # SQL-text twin of money.dsum's BIGINT-cents path: spark.sql takes
+    # no computed Column, and this query exercises the SQL surface
     return spark_.sql("""
         SELECT o_orderstatus AS status, o_orderpriority AS priority,
                CAST(grouping_id(o_orderstatus, o_orderpriority) AS INT) AS gid,

@@ -16,9 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.datetime_utils import sale_date
-from ..functions.money import (
-    _cents, _cents_sum_to_double, dsum, dsum_as, oracle_dsum,
-)
+from ..functions.money import cents, cents_to_double, dsum, oracle_dsum
 from .registry import register
 
 
@@ -194,7 +192,7 @@ def q_pivot_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     piv = (
         o.groupBy(F.col("o_orderpriority").alias("priority"))
         .pivot("o_orderstatus", _STATUSES)
-        .agg(_cents_sum_to_double(F.sum(_cents(F.col("o_totalprice")))))
+        .agg(dsum("o_totalprice"))
     )
     return piv.select(
         "priority", *[F.col(s).alias(f"revenue_{s}") for s in _STATUSES]
@@ -223,8 +221,8 @@ def q_distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_custkey").alias("n_customers"),
             # distinct CENTS ↔ distinct 2dp decimals is a bijection for
             # exact-2dp money, so SUM(DISTINCT) is value-identical (r13)
-            _cents_sum_to_double(
-                F.sum_distinct(_cents(F.col("o_totalprice"))))
+            cents_to_double(
+                F.sum_distinct(cents(F.col("o_totalprice"))))
             .alias("sum_distinct_price"),
             F.count("*").alias("n"),
         )
@@ -395,7 +393,7 @@ def q_bucketed_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # decimal(18,4): money products are exact at 4dp — a 2dp
             # cast would round per-row, which is engine-ambiguous at
             # half boundaries (functions.money invariant)
-            dsum_as("l_extendedprice * (1 - l_discount)",
-                    "decimal(18,4)", "revenue"),
+            dsum("l_extendedprice * (1 - l_discount)",
+                 "revenue", dec="decimal(18,4)"),
         )
     )

@@ -14,9 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.money import (
-    _cents, _cents_sum_to_double, dsum, dsum10, oracle_dsum,
-)
+from ..functions.money import cents, cents_to_double, dsum, oracle_dsum
 from ..operators.salesviews import sales_daily
 from .registry import register
 from .relational import SALES_DAILY_SQL
@@ -129,7 +127,7 @@ def q_revenue_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = daily.groupBy("product").agg(
         F.count("*").alias("n"),
         dsum("total_revenue").alias("sx"),
-        dsum10("total_revenue * total_revenue").alias("sxx"),
+        dsum("total_revenue * total_revenue", "sxx", dec="decimal(28,10)"),
     )
     z = (F.col("total_revenue") - F.col("sx") / F.col("n")) / F.sqrt(
         (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")) / (F.col("n") - 1)
@@ -169,7 +167,7 @@ def q_incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.month("o_orderdate").alias("month"),
         ).agg(
             F.count("*").alias("n_orders"),
-            F.sum(_cents(F.col("o_totalprice"))).alias("_rev_c"),
+            F.sum(cents(F.col("o_totalprice"))).alias("_rev_c"),
         )
 
     base = partial(orders.filter(F.col("o_orderdate") < cutoff))
@@ -179,7 +177,7 @@ def q_incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("year", "month")
         .agg(
             F.sum("n_orders").alias("n_orders"),
-            _cents_sum_to_double(F.sum("_rev_c")).alias("total_revenue"),
+            cents_to_double(F.sum("_rev_c")).alias("total_revenue"),
         )
     )
 
@@ -229,7 +227,7 @@ def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = daily.groupBy("product", "day_of_week").agg(
         F.count("*").alias("n"),
         dsum("total_revenue").alias("sx"),
-        dsum10("total_revenue * total_revenue").alias("sxx"),
+        dsum("total_revenue * total_revenue", "sxx", dec="decimal(28,10)"),
     )
     var_num = F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")
     z = (F.col("total_revenue") - F.col("sx") / F.col("n")) / F.sqrt(

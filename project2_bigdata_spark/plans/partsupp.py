@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.money import dec_to_double
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -166,7 +167,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "e.s_acctbal", "e.s_name", "e.n_name",
             F.col("e.ps_partkey").alias("p_partkey"),
-            F.col("e.ps_supplycost").cast("string").cast("double")
+            dec_to_double(F.col("e.ps_supplycost"))
             .alias("supplycost"),
         )
         .orderBy(F.col("s_acctbal").desc(), "n_name", "s_name", "p_partkey")
@@ -228,7 +229,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("v") * _Q11_DENOM > F.col("tot"))
         .select(
             "ps_partkey",
-            F.col("v").cast("string").cast("double").alias("stock_value"),
+            dec_to_double(F.col("v")).alias("stock_value"),
         )
         .orderBy(F.col("stock_value").desc(), "ps_partkey")
     )

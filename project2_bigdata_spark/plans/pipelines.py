@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.datetime_utils import sale_date
 from ..functions.money import (
-    _cents, _cents_sum_to_double, dsum, oracle_dsum,
+    cents, cents_to_double, dec_to_double, dsum, oracle_dsum,
 )
 from ..operators.salesviews import sale_lines, tickets
 from .registry import register
@@ -57,10 +57,9 @@ def q_ep1_sales_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql.window import Window
 
-    total = (
+    total = dec_to_double(
         F.sum(F.col("total_revenue").cast("decimal(18,2)"))
         .over(Window.partitionBy())
-        .cast("string").cast("double")
     )
     return per_product.withColumn(
         "revenue_share_pct", F.col("total_revenue") / total * 100
@@ -275,11 +274,11 @@ def q_ep2_customer_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_ticket = truncate_lineage(
         lines.groupBy("custkey", "o_orderkey")
         .agg(F.min("o_orderdate").alias("d"),
-             F.sum(_cents(F.col("revenue"))).alias("t_rev"))
+             F.sum(cents(F.col("revenue"))).alias("t_rev"))
     )
     kpis = per_ticket.groupBy("custkey").agg(
         F.count("*").alias("n_tickets"),
-        _cents_sum_to_double(F.sum("t_rev")).alias("total_spent"),
+        cents_to_double(F.sum("t_rev")).alias("total_spent"),
     )
     wday = Window.partitionBy("custkey").orderBy(F.desc("n"), "day_name")
     fav_day = (

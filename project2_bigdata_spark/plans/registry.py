@@ -4,9 +4,11 @@ Contract (driver, see ``__spark_entry__.py``): each query is a callable
 ``(spark, sf_dir) -> DataFrame`` plus, when SQL-expressible, a DuckDB
 oracle SQL string computing the same relation over the same parquet
 tables. Column names (and, for exactness, values) must match — aggregate
-columns are aliased identically on both sides, money sums go through the
-decimal-exact path (functions.money) so the double values are
-bit-identical regardless of row order or partitioning.
+columns are aliased identically on both sides, and money sums go through
+``functions.money.dsum`` on the Spark side and its twin ``oracle_dsum``
+in the oracle SQL (exact sum, decimal→double via a string round-trip),
+so the double values are bit-identical regardless of row order or
+partitioning.
 """
 
 from __future__ import annotations

@@ -19,7 +19,7 @@ from ..functions.datetime_utils import (
     day_name, is_weekend, pandas_weekday, sale_date, week_start,
 )
 from ..functions.money import (
-    dsum, dsum10, dsum_as, oracle_dsum, oracle_dsum10, safe_div,
+    cents, cents_to_double, dsum, oracle_dsum, safe_div,
 )
 from ..operators.salesviews import sale_lines, sales_daily, tickets
 from .registry import register
@@ -123,25 +123,23 @@ def q_kpi_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first() over the DATE (not the formatted string) — all lines of a
     # ticket share o_orderdate, and countDistinct(date) ≡ countDistinct
     # of its 1:1 'yyyy-MM-dd' image.
-    from ..functions.money import _cents, _cents_sum_to_double
-
     per_ticket = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderkey")
         .agg(
-            F.sum(_cents(F.col("l_quantity"))).alias("t_units"),
-            F.sum(_cents(F.col("l_extendedprice"))).alias("t_rev"),
+            F.sum(cents(F.col("l_quantity"))).alias("t_units"),
+            F.sum(cents(F.col("l_extendedprice"))).alias("t_rev"),
             F.first(F.col("o_orderdate").cast("date")).alias("date"),
         )
     )
-    dec2dbl = lambda c: _cents_sum_to_double(F.sum(c))  # noqa: E731
+    rev = cents_to_double(F.sum("t_rev"))
     return per_ticket.agg(
-        dec2dbl(F.col("t_units")).alias("total_units"),
-        dec2dbl(F.col("t_rev")).alias("total_revenue"),
+        cents_to_double(F.sum("t_units")).alias("total_units"),
+        rev.alias("total_revenue"),
         F.countDistinct("date").alias("num_days"),
-        (dec2dbl(F.col("t_rev")) / F.countDistinct("date")).alias("revenue_per_day"),
+        (rev / F.countDistinct("date")).alias("revenue_per_day"),
         F.count("*").alias("num_tickets"),
-        (dec2dbl(F.col("t_rev")) / F.count("*")).alias("avg_ticket_revenue"),
+        (rev / F.count("*")).alias("avg_ticket_revenue"),
     )
 
 
@@ -243,7 +241,7 @@ def q_volatility_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = daily.groupBy("product").agg(
         F.count("*").alias("n"),
         dsum("total_quantity").alias("sx"),
-        dsum10("total_quantity * total_quantity").alias("sxx"),
+        dsum("total_quantity * total_quantity", "sxx", dec="decimal(28,10)"),
         (dsum("total_quantity") / F.count("*")).alias("mean_qty"),
     )
     std = F.when(
@@ -287,9 +285,9 @@ def q_corr_revenue_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("double").alias("n"),
             dsum("revenue").alias("sx"),
             dsum("quantity").alias("sy"),
-            dsum_as("revenue * revenue", "decimal(28,4)", "sxx"),
-            dsum_as("quantity * quantity", "decimal(28,4)", "syy"),
-            dsum_as("revenue * quantity", "decimal(28,4)", "sxy"),
+            dsum("revenue * revenue", "sxx", dec="decimal(28,4)"),
+            dsum("quantity * quantity", "syy", dec="decimal(28,4)"),
+            dsum("revenue * quantity", "sxy", dec="decimal(28,4)"),
         )
     )
     num = m.n * m.sxy - m.sx * m.sy
@@ -635,15 +633,13 @@ def q_customer_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     customer = table(spark, sf_dir, "customer")
     lineitem = table(spark, sf_dir, "lineitem")
-    from ..functions.money import _cents, _cents_sum_to_double
-
     # BIGINT cents through BOTH aggregation levels (r13 — the
     # kpi_global treatment): the ticket rollup sums exact cents, the
     # customer rollup re-sums the longs, and only the one-per-group
     # finisher widens to decimal for the oracle's string round-trip.
     per_ticket = (
         lineitem.groupBy("l_orderkey")
-        .agg(F.sum(_cents(F.col("l_extendedprice"))).alias("t_rev"))
+        .agg(F.sum(cents(F.col("l_extendedprice"))).alias("t_rev"))
     )
     return (
         per_ticket
@@ -652,7 +648,7 @@ def q_customer_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_name").alias("customer_email"))
         .agg(
             F.count("*").alias("num_purchases"),
-            _cents_sum_to_double(F.sum("t_rev")).alias("total_spent"),
+            cents_to_double(F.sum("t_rev")).alias("total_spent"),
         )
     )
 
@@ -683,10 +679,10 @@ def q_sql_view_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import register_views
 
     register_views(spark, sf_dir)
-    # SQL twin of dsum's BIGINT-cents path (r13): same operation
-    # sequence as functions.money — exact cents sum, decimal(38,2)/100
-    # widen, string round-trip — so the double is bit-identical to the
-    # oracle's decimal form.
+    # SQL-text twin of money.dsum's BIGINT-cents path (spark.sql takes
+    # no computed Column, and this query exercises the SQL surface):
+    # exact cents sum, decimal(38,2)/100 widen, string round-trip — so
+    # the double is bit-identical to the oracle's decimal form.
     return spark.sql("""
         SELECT product,
                CAST(CAST(CAST(SUM(CAST(ROUND(revenue * 100) AS BIGINT))
@@ -721,18 +717,16 @@ def q_sql_view_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "runs post-aggregation, never on the fact)",
 )
 def q_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.money import _cents, _cents_sum_to_double
-
     totals = (
         sale_lines(spark, sf_dir)
         .groupBy("product")
-        .agg(F.sum(_cents(F.col("revenue"))).alias("rev_c"))
+        .agg(F.sum(cents(F.col("revenue"))).alias("rev_c"))
     )
     w = Window.partitionBy()
-    dbl = _cents_sum_to_double
+    rev = cents_to_double(F.col("rev_c"))
     return totals.select(
         "product",
-        dbl(F.col("rev_c")).alias("product_revenue"),
-        (dbl(F.col("rev_c")) / dbl(F.sum("rev_c").over(w)) * 100)
+        rev.alias("product_revenue"),
+        (rev / cents_to_double(F.sum("rev_c").over(w)) * 100)
         .alias("revenue_share_pct"),
     )

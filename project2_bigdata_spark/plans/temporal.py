@@ -797,8 +797,6 @@ def q_holt_linear_daily(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ..catalog import table
-    from ..functions.money import dsum_as
-
     # range predicate (not year()==1997) so the filter reaches the
     # parquet scan's PushedFilters / row-group stats
     li = table(spark, sf_dir, "lineitem").filter(
@@ -807,8 +805,8 @@ def q_holt_linear_daily(spark, sf_dir):
     )
     daily = li.groupBy(
         "l_partkey", F.to_date("l_shipdate").alias("day")
-    ).agg(dsum_as("l_extendedprice * (1 - l_discount)",
-                  "decimal(18,4)", "rev"))
+    ).agg(dsum("l_extendedprice * (1 - l_discount)",
+               "rev", dec="decimal(18,4)"))
     arrs = (
         daily.groupBy("l_partkey")
         .agg(F.array_sort(F.collect_list(F.struct("day", "rev"))).alias("s"))
@@ -926,16 +924,14 @@ def q_holt_winters_daily(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ..catalog import table
-    from ..functions.money import dsum_as
-
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1998-01-01")
     )
     daily = li.groupBy(
         "l_partkey", F.to_date("l_shipdate").alias("day")
-    ).agg(dsum_as("l_extendedprice * (1 - l_discount)",
-                  "decimal(18,4)", "rev"))
+    ).agg(dsum("l_extendedprice * (1 - l_discount)",
+               "rev", dec="decimal(18,4)"))
     # the dense grid materializes INSIDE the numpy kernel as a scatter:
     # building it JVM-side with element_at(map, day) costs an O(|map|)
     # linear probe per lookup (ArrayBasedMapData has no hash index) —

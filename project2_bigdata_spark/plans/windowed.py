@@ -13,9 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.datetime_utils import is_weekend, pandas_weekday
-from ..functions.money import (
-    _cents, _cents_sum_to_double, dsum, oracle_dsum,
-)
+from ..functions.money import cents, cents_to_double, dsum, oracle_dsum
 from ..operators.salesviews import sale_lines
 from .registry import register
 
@@ -182,8 +180,8 @@ def q_moving_avg_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dsum output, so the frame sum in cents is exact and the
         # decimal(38,2)/100 + string round-trip reproduces the oracle's
         # decimal digits.
-        _cents_sum_to_double(
-            F.sum(_cents(F.col("total_revenue"))).over(w))
+        cents_to_double(
+            F.sum(cents(F.col("total_revenue"))).over(w))
         .alias("sum7_revenue"),
     )
 
@@ -208,8 +206,8 @@ def q_cumulative_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _daily(spark, sf_dir).select(
         "product", F.date_format("date", "yyyy-MM-dd").alias("date"),
-        _cents_sum_to_double(
-            F.sum(_cents(F.col("total_revenue"))).over(w))
+        cents_to_double(
+            F.sum(cents(F.col("total_revenue"))).over(w))
         .alias("cum_revenue"),
     )
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import table
+from ..functions.money import dec_to_double
 from ..plans.registry import register
 
 #: Read schema for the reference's sale documents in extended JSON.
@@ -2730,7 +2731,7 @@ def q_scd1_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "last_orderkey",
         F.date_format("last_orderdate", "yyyy-MM-dd HH:mm:ss")
         .alias("last_orderdate"),
-        F.col("last_totalprice").cast("string").cast("double")
+        dec_to_double(F.col("last_totalprice"))
         .alias("last_totalprice"),
         F.col("_change_type").alias("change_type"),
         F.col("_commit_version").alias("commit_version"),
@@ -2793,7 +2794,7 @@ def _scd1_out(df: DataFrame, *extra) -> DataFrame:
         "o_custkey", "last_orderkey",
         F.date_format("last_orderdate", "yyyy-MM-dd HH:mm:ss")
         .alias("last_orderdate"),
-        F.col("last_totalprice").cast("string").cast("double")
+        dec_to_double(F.col("last_totalprice"))
         .alias("last_totalprice"),
         *extra,
     )
@@ -3146,8 +3147,8 @@ def q_lakehouse_optimize_zorder(
     path = session_spool(spark, "lh_zorder_")
     proj = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey",
-        F.col("o_totalprice").cast("decimal(18,2)").cast("string")
-        .cast("double").alias("total_price"),
+        dec_to_double(F.col("o_totalprice").cast("decimal(18,2)"))
+        .alias("total_price"),
     )
     # adversarial base layout: hash-shuffled, so pre-optimize stats
     # are useless for either column
@@ -3189,8 +3190,8 @@ def q_lakehouse_stats_skipping_scan(
     path = session_spool(spark, "lh_skip_")
     proj = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey",
-        F.col("o_totalprice").cast("decimal(18,2)").cast("string")
-        .cast("double").alias("total_price"),
+        dec_to_double(F.col("o_totalprice").cast("decimal(18,2)"))
+        .alias("total_price"),
     )
     assert commit_version(proj.repartitionByRange(8, "o_orderkey"),
                           path, 1)
@@ -3413,8 +3414,8 @@ def q_lakehouse_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = session_spool(spark, "lh_delete_")
     proj = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey",
-        F.col("o_totalprice").cast("decimal(18,2)").cast("string")
-        .cast("double").alias("total_price"),
+        dec_to_double(F.col("o_totalprice").cast("decimal(18,2)"))
+        .alias("total_price"),
         F.col("o_orderpriority").alias("priority"),
     )
     assert commit_version(proj.repartitionByRange(8, "o_orderkey"),
@@ -3458,8 +3459,8 @@ def q_lakehouse_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = session_spool(spark, "lh_update_")
     proj = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey",
-        F.col("o_totalprice").cast("decimal(18,2)").cast("string")
-        .cast("double").alias("total_price"),
+        dec_to_double(F.col("o_totalprice").cast("decimal(18,2)"))
+        .alias("total_price"),
         F.col("o_orderpriority").alias("priority"),
     )
     assert commit_version(proj.repartitionByRange(8, "o_custkey"),
@@ -3755,8 +3756,8 @@ def q_ingest_extended_json_repair(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("d._id.`$oid`").alias("sale_id"),
         F.date_format(repair_sale_date(raw_date), "yyyy-MM-dd HH:mm:ss")
          .alias("sale_ts"),
-        F.col("d.price.`$numberDecimal`").cast("decimal(18,2)")
-         .cast("string").cast("double").alias("total_price"),
+        dec_to_double(F.col("d.price.`$numberDecimal`").cast("decimal(18,2)"))
+        .alias("total_price"),
         F.col("d.purchaseMethod").alias("purchase_method"),
     )
 
@@ -3871,7 +3872,7 @@ def q_scd1_bucketed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "last_orderkey",
         F.date_format("last_orderdate", "yyyy-MM-dd HH:mm:ss")
         .alias("last_orderdate"),
-        F.col("last_totalprice").cast("string").cast("double")
+        dec_to_double(F.col("last_totalprice"))
         .alias("last_totalprice"),
     )
 
@@ -3937,7 +3938,7 @@ def q_scd1_customer_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "last_orderkey",
         F.date_format("last_orderdate", "yyyy-MM-dd HH:mm:ss")
         .alias("last_orderdate"),
-        F.col("last_totalprice").cast("string").cast("double")
+        dec_to_double(F.col("last_totalprice"))
         .alias("last_totalprice"),
     )
 
@@ -4015,8 +4016,8 @@ def _sale_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_parallel(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("string").alias("sale_id"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("sale_ts"),
-        F.col("o_totalprice").cast("decimal(18,2)").cast("string")
-        .cast("double").alias("total_price"),
+        dec_to_double(F.col("o_totalprice").cast("decimal(18,2)"))
+        .alias("total_price"),
         F.col("o_orderpriority").alias("purchase_method"),
     )
 

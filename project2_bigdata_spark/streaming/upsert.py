@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import dec_to_double
 from ..plans.registry import register
 from .runner import _ROCKSDB, session_spool
 from .source import events_stream
@@ -205,7 +206,7 @@ def q_stream_scd1_user_last_event(
         F.date_format("last_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
         .alias("last_ts"),
         "last_event_type",
-        F.col("last_value").cast("string").cast("double")
+        dec_to_double(F.col("last_value"))
         .alias("last_value"),
     )
 
@@ -257,7 +258,7 @@ def q_stream_scd1_bucketed_cow(
         F.date_format("last_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
         .alias("last_ts"),
         "last_event_type",
-        F.col("last_value").cast("string").cast("double")
+        dec_to_double(F.col("last_value"))
         .alias("last_value"),
     )
 
@@ -308,7 +309,7 @@ def q_stream_scd1_auto_optimize(
         F.date_format("last_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
         .alias("last_ts"),
         "last_event_type",
-        F.col("last_value").cast("string").cast("double")
+        dec_to_double(F.col("last_value"))
         .alias("last_value"),
     )
 

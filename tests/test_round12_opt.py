@@ -13,13 +13,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from project2_bigdata_spark.functions.money import DEC, _dec_to_double, dsum
+from project2_bigdata_spark.functions.money import DEC, dec_to_double, dsum
 from project2_bigdata_spark.sources.ingest import _dedup_delta
 
 
 def _old_dsum(col: str):
     """The pre-r12 decimal-accumulator formulation (reference)."""
-    return _dec_to_double(F.sum(F.col(col).cast(DEC)))
+    return dec_to_double(F.sum(F.col(col).cast(DEC)))
 
 
 def test_dsum_matches_decimal_reference_adversarial(spark):

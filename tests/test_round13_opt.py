@@ -24,7 +24,7 @@ SF_DIRS = [d for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 needs_testdata = pytest.mark.skipif(
     not SF_DIRS, reason="no sf0.001/sf0.01 testdata on this host")
 
-#: (table, column) pairs consumed by dsum/_cents call sites (directly or
+#: (table, column) pairs consumed by dsum/cents call sites (directly or
 #: via sale_lines/tickets projections).
 MONEY_COLS = [
     ("lineitem", "l_extendedprice"),
@@ -72,7 +72,7 @@ def test_dsum_outputs_are_2dp_exact(spark):
 @needs_testdata
 def test_cents_window_sum_matches_decimal_window_sum(spark):
     from project2_bigdata_spark.functions.money import (
-        _cents, _cents_sum_to_double,
+        cents, cents_to_double,
     )
     from project2_bigdata_spark.plans.windowed import _daily
 
@@ -80,8 +80,8 @@ def test_cents_window_sum_matches_decimal_window_sum(spark):
     w = (Window.partitionBy("product").orderBy("date")
          .rowsBetween(-6, Window.currentRow))
     both = d.select(
-        _cents_sum_to_double(
-            F.sum(_cents(F.col("total_revenue"))).over(w)).alias("c"),
+        cents_to_double(
+            F.sum(cents(F.col("total_revenue"))).over(w)).alias("c"),
         F.sum(F.col("total_revenue").cast("decimal(18,2)")).over(w)
         .cast("string").cast("double").alias("dec"),
     )
@@ -91,13 +91,13 @@ def test_cents_window_sum_matches_decimal_window_sum(spark):
 @needs_testdata
 def test_sum_distinct_cents_matches_decimal(spark):
     from project2_bigdata_spark.functions.money import (
-        _cents, _cents_sum_to_double,
+        cents, cents_to_double,
     )
 
     o = spark.read.parquet(f"{SF_DIRS[0]}/orders.parquet")
     row = o.agg(
-        _cents_sum_to_double(
-            F.sum_distinct(_cents(F.col("o_totalprice")))).alias("c"),
+        cents_to_double(
+            F.sum_distinct(cents(F.col("o_totalprice")))).alias("c"),
         F.sum_distinct(F.col("o_totalprice").cast("decimal(18,2)"))
         .cast("string").cast("double").alias("dec"),
     ).collect()[0]

@@ -82,6 +82,30 @@ def test_dsum_partition_order_invariance(spark):
     assert a == b  # bit-identical, not approximately equal
 
 
+def test_dsum_decimal_path_partition_invariance(spark):
+    """``dsum(..., dec=...)`` — the path for inputs that are not exactly
+    2dp (4dp products, moment sums) — is exact: the same double at any
+    partitioning, equal to the decimal sum through the one
+    decimal→double conversion, and null for an all-null group."""
+    from project2_bigdata_spark.functions.money import dec_to_double, dsum
+
+    rows = [("ab"[i % 2], float(f"{i}.{i % 100:02d}"), (i % 9) / 100)
+            for i in range(1, 3001)]
+    rows += [("c", None, 0.05), ("c", None, 0.01)]
+    df = spark.createDataFrame(rows, "k string, x double, y double")
+    expr = F.col("x") * F.col("y")  # 4dp
+    got = [
+        {r.k: r.s for r in df.repartition(n).groupBy("k")
+         .agg(dsum(expr, "s", dec="decimal(28,4)")).collect()}
+        for n in (1, 16)
+    ]
+    ref = {r.k: r.s for r in df.groupBy("k").agg(
+        dec_to_double(F.sum(expr.cast("decimal(28,4)"))).alias("s"))
+        .collect()}
+    assert got[0] == got[1] == ref  # bit-identical, not approximately equal
+    assert ref["c"] is None and ref["a"] is not None
+
+
 def test_approx_count_distinct_within_bounds(spark, sf_dir):
     """approx_distinct_customers is theta-backed since r7 (exact-mode
     regime ⇒ hash-parity oracle). This test keeps the two approximate
@@ -758,3 +782,55 @@ def test_one_lakehouse_publish_seam():
     assert len(publishers) == 1, sorted(publishers)
     assert len(loopers) == 1, sorted(loopers)
     assert len(linkers) == 1, sorted(linkers)
+
+
+def test_money_formulas_live_in_money_py():
+    """One way to sum money: the exact-sum policy (BIGINT cents or
+    decimal, then decimal→double through a string round-trip) is spelled
+    only in ``functions/money.py``. A copy elsewhere drifts from it, as
+    the five hand-copied ``dsum`` bodies and local re-derivations once
+    did. Static scan of the package, money.py excluded: no inline
+    ``.cast("string").cast("double")`` chain, no private name imported
+    from money.py, and money.py's public surface is exactly the one sum
+    entry point, its oracle twin and the helpers the multi-stage cent
+    sums need. No Spark needed."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "project2_bigdata_spark"
+    money = pkg / "functions" / "money.py"
+
+    def cast_to(node, typ):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "cast" and len(node.args) == 1
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == typ)
+
+    round_trips, private = [], []
+    for f in sorted(pkg.rglob("*.py")):
+        if f == money:
+            continue
+        rel = f.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(f.read_text())):
+            if cast_to(node, "double") and cast_to(node.func.value, "string"):
+                round_trips.append(f"{rel}:{node.lineno}")
+            if (isinstance(node, ast.ImportFrom)
+                    and (node.module or "").split(".")[-1] == "money"):
+                private += [f"{rel}:{node.lineno} {a.name}"
+                            for a in node.names if a.name.startswith("_")]
+    assert round_trips == [], round_trips
+    assert private == [], private
+
+    public = set()
+    for node in ast.parse(money.read_text()).body:
+        if isinstance(node, ast.FunctionDef):
+            public.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [
+                node.target]
+            public |= {t.id for t in targets if isinstance(t, ast.Name)}
+    public = {n for n in public if not n.startswith("_")}
+    assert public == {"DEC", "safe_div", "dsum", "cents", "cents_to_double",
+                      "dec_to_double", "oracle_dsum"}, sorted(public)

@@ -1,20 +1,28 @@
-"""Dump .explain("formatted") for a list of queries.
+"""Dump the analyzed and the formatted physical plan for a list of queries.
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> <name1> [name2 ...]
-Writes <out_dir>/<name>_<suffix>.txt for each query. Runs on sf0.1
-(``SPARK_GRAFT_SF_DIR`` overrides) at the same session posture as
-bench.py.
+Writes <out_dir>/<name>_<suffix>.txt (``.explain("formatted")``) and,
+next to it, <out_dir>/<name>_<suffix>.analyzed.txt (the analyzed logical
+plan) for each query. Expression IDs are masked (``#123L`` → ``#N``), so
+a ``diff -r`` of a before and an after dump shows only real plan
+changes. Runs on sf0.1 (``SPARK_GRAFT_SF_DIR`` overrides) at the same
+session posture as bench.py.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from project2_bigdata_spark.plans import REGISTRY  # noqa: E402
 from project2_bigdata_spark.session import get_session  # noqa: E402
+
+
+def _mask_ids(plan: str) -> str:
+    return re.sub(r"#\d+L?", "#N", plan)
 
 
 def main() -> None:
@@ -25,12 +33,14 @@ def main() -> None:
     spark = get_session("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for n in names:
-        df = REGISTRY[n].fn(spark, sf_dir)
-        txt = df._jdf.queryExecution().explainString(
+        qe = REGISTRY[n].fn(spark, sf_dir)._jdf.queryExecution()
+        physical = qe.explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"))
-        with open(os.path.join(out_dir, f"{n}_{suffix}.txt"), "w") as f:
-            f.write(txt)
+        for ext, txt in (("txt", physical),
+                         ("analyzed.txt", qe.analyzed().toString())):
+            with open(os.path.join(out_dir, f"{n}_{suffix}.{ext}"), "w") as f:
+                f.write(_mask_ids(txt))
         print("dumped", n)
     spark.stop()
 
