@@ -147,20 +147,6 @@ def _input_bytes(path: str) -> int:
         return _SMALL_INPUT_BYTES
 
 
-class Catalog:
-    """Convenience handle: ``cat.lineitem`` → DataFrame (fresh lazy scan)."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str):
-        self.spark = spark
-        self.sf_dir = sf_dir
-        tune(spark)
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name in TABLES:
-            return table(self.spark, self.sf_dir, name)
-        raise AttributeError(name)
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """SQL view layer (SURVEY.md §4.2): temp views for every base table
     plus the derived sales relations, so the engine's whole surface is

@@ -3,20 +3,23 @@
 Near-dup detection yields PAIRS (dedup.py); production dedup needs
 CLUSTERS: transitive groups with one canonical survivor each. That is
 connected components over the pair graph — the one operator in this
-engine that is inherently iterative, so it runs a driver-controlled
-label-propagation fixpoint (the GraphX/GraphFrames pattern without the
-library): every vertex repeatedly adopts the minimum label among itself
-and its neighbors; convergence in O(graph diameter) rounds.
+engine that runs until it converges, so it is a label-propagation
+fixpoint on the round driver (fixpoint.iterate; the GraphX/GraphFrames
+pattern without the library): every vertex repeatedly adopts the
+minimum label among itself and its neighbors; convergence in O(graph
+diameter) rounds.
 
 Scale shape per round: one shuffle join (edges ⋈ labels on src) + one
 min-aggregate by dst — both key-partitioned, no stage is quadratic.
-The convergence probe is a scalar aggregate per round (sum of labels,
-monotonically decreasing), which is the unavoidable driver action of
-any fixpoint loop. Lineage is truncated per round via
-session.truncate_lineage — localCheckpoint on local mode, reliable
-checkpoint() when SPARK_GRAFT_CHECKPOINT_DIR is set (a cluster run) —
-so plans don't grow with iteration count and executor loss can't kill
-the loop mid-flight.
+The convergence signal is the sum of labels (monotonically
+decreasing), observed on the job that materializes the round's labels,
+so no round runs a probe job of its own. Each round's labels are
+truncated via session.truncate_lineage — localCheckpoint on local
+mode, reliable checkpoint() when SPARK_GRAFT_CHECKPOINT_DIR is set (a
+cluster run) — so plans don't grow with the round count and executor
+loss can't kill the loop mid-flight. A graph that has not converged
+within MAX_CC_ITERATIONS rounds (a component of diameter ≥ 20) raises
+instead of returning wrong cluster ids.
 """
 
 from __future__ import annotations
@@ -28,14 +31,13 @@ from pyspark.sql.window import Window
 from ..catalog import table
 from ..session import truncate_lineage
 from .dedup import blocked_jaccard_pairs
+from .fixpoint import iterate
 from .textstats import fingerprint
 
 MAX_CC_ITERATIONS = 20
 
 
-def connected_components(
-    vertices: DataFrame, edges: DataFrame, max_iter: int = MAX_CC_ITERATIONS
-) -> DataFrame:
+def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """Min-label propagation: (doc_id) × (src, dst) → (doc_id, cluster_id)
     where cluster_id = min doc_id in the component. Deterministic for any
     edge order; singleton vertices keep themselves as cluster_id."""
@@ -52,27 +54,24 @@ def connected_components(
         ),
         eager=True,
     )
-    labels = vertices.select("doc_id", F.col("doc_id").alias("label"))
-    prev_sum = None
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame) -> DataFrame:
         nbr_min = (
             sym.join(labels, sym.src == labels.doc_id)
             .groupBy("dst")
             .agg(F.min("label").alias("nbr_min"))
         )
-        labels = truncate_lineage(
-            labels.join(nbr_min, labels.doc_id == nbr_min.dst, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_min", F.col("label"))
-                ).alias("label"),
-            )
+        label = F.least(F.col("label"), F.coalesce("nbr_min", F.col("label")))
+        return labels.join(nbr_min, labels.doc_id == nbr_min.dst, "left").select(
+            "doc_id", label.alias("label")
         )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:  # fixpoint: no label moved this round
-            break
-        prev_sum = cur_sum
+
+    labels = iterate(
+        vertices.select("doc_id", F.col("doc_id").alias("label")),
+        propagate,
+        rounds=MAX_CC_ITERATIONS,
+        until=F.sum("label"),  # no label moved ⇔ the sum repeats
+    )
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 

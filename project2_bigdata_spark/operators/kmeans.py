@@ -31,6 +31,7 @@ from ..catalog import table_parallel
 from ..functions.money import dsum
 from ..plans.registry import register
 from ..session import truncate_lineage
+from .fixpoint import iterate
 
 K = 4
 N_ITER = 2
@@ -94,31 +95,40 @@ def _update(assigned: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run N_ITER assign→update rounds from the deterministic seed set
-    (vec_id < K); report per-cluster size, final centroid norm, and the
-    centroid movement of the last update (the convergence signal)."""
-    vecs = _vectors(spark, sf_dir)
-    cents = (
-        vecs.filter(F.col("vec_id") < K)
+def lloyd(vecs: DataFrame, k: int, rounds: int) -> tuple[DataFrame, DataFrame]:
+    """Seed ``k`` centroids deterministically (vec_id < k) and refine
+    them by ``rounds`` assign→update rounds on the fixpoint driver.
+    Returns the centroid rows {cents: array<struct<cid,cemb>>} before
+    and after the last round."""
+    seed = (
+        vecs.filter(F.col("vec_id") < k)
         .select(
             F.struct(F.col("vec_id").cast("int").alias("cid"), F.col("ed").alias("cemb")).alias("c")
         )
         .agg(F.sort_array(F.collect_list("c")).alias("cents"))
     )
-    # Checkpoint each 1-row centroid frame: truncating the lineage there
-    # means iteration t's assignment does NOT re-derive iteration t-1's
-    # whole assign+update subtree, so the corpus is scanned once per
-    # iteration (was 8 scan branches for 2 iterations) — the standard
-    # fix for iterative-lineage blowup, same pattern as graph.py's
-    # connected components. The checkpointed frames are K centroids (one
-    # row), so materialization cost is nil at any corpus size.
-    assigned = None
-    prev_cents = None
-    cents = truncate_lineage(cents)
-    for _ in range(N_ITER):
-        assigned = _assign(vecs, cents)
-        prev_cents, cents = cents, truncate_lineage(_update(assigned))
+
+    def lloyd_round(cents: DataFrame) -> DataFrame:
+        return _update(_assign(vecs, cents))
+
+    # Every 1-row centroid frame is truncated (the seed here, each
+    # round's in iterate): round t's assignment then does NOT re-derive
+    # round t-1's whole assign+update subtree, so the corpus is scanned
+    # once per round (was 8 scan branches for 2 rounds) — the standard
+    # fix for iterative-lineage blowup. The truncated frames are K
+    # centroids (one row), so materialization cost is nil at any
+    # corpus size.
+    prev = iterate(truncate_lineage(seed), lloyd_round, rounds=rounds - 1)
+    return prev, iterate(prev, lloyd_round, rounds=1)
+
+
+def kmeans_cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run N_ITER assign→update rounds from the deterministic seed set
+    (vec_id < K); report per-cluster size, final centroid norm, and the
+    centroid movement of the last update (the convergence signal)."""
+    vecs = _vectors(spark, sf_dir)
+    prev_cents, cents = lloyd(vecs, K, N_ITER)
+    assigned = _assign(vecs, prev_cents)
     sizes = assigned.groupBy("cid").agg(F.count("*").alias("n_vecs"))
     fold = (
         "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "

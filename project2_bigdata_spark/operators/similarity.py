@@ -230,31 +230,18 @@ _CENT_RANKING = (
 )
 
 
-def _kmeans_centroids_row(
-    spark: SparkSession, sf_dir: str, n_iter: int = 2
-) -> DataFrame:
+def _kmeans_centroids_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd-refined centroid row for the IVF pre-pass: N_CENTROIDS
-    seeds (vec_id < N_CENTROIDS) refined by ``n_iter`` spherical k-means
-    iterations (the same assign/update operators the oracle-checked
+    seeds (vec_id < N_CENTROIDS) refined by ``kmeans.N_ITER`` spherical
+    k-means rounds (the same ``kmeans.lloyd`` the oracle-checked
     ``kmeans_lloyd_2iter`` query runs, at K=N_CENTROIDS), emitted in the
     {cents: array<struct<cid, cemb, cnrm>>} shape the cell-assignment
-    expression consumes. Per iteration: broadcast row-local assignment +
+    expression consumes. Per round: broadcast row-local assignment +
     a (K×dims)-cell aggregation — nothing here grows beyond O(N·K·dim).
     """
-    from ..session import truncate_lineage
-    from .kmeans import _assign, _update, _vectors
+    from .kmeans import N_ITER, _vectors, lloyd
 
-    vecs = _vectors(spark, sf_dir)
-    cents = truncate_lineage(
-        vecs.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.struct(
-            F.col("vec_id").cast("int").alias("cid"),
-            F.col("ed").alias("cemb"),
-        ).alias("c"))
-        .agg(F.sort_array(F.collect_list("c")).alias("cents"))
-    )
-    for _ in range(n_iter):
-        cents = truncate_lineage(_update(_assign(vecs, cents)))
+    _, cents = lloyd(_vectors(spark, sf_dir), N_CENTROIDS, N_ITER)
     # decorate with the per-centroid norm the ranking expression expects
     return cents.select(F.expr(
         "transform(cents, c -> struct(c.cid as cid, c.cemb as cemb, "

@@ -13,12 +13,13 @@ DuckDB oracle. Engine-portability rules followed throughout:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import table, table_parallel
 from ..functions.money import cents, dsum, oracle_dsum
+from ..operators.fixpoint import iterate
 from ..session import truncate_lineage
 from .registry import register
 
@@ -610,6 +611,63 @@ def q_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(w, sym, tf): every corpus word, its characters joined by '~',
+    and its corpus frequency — the vocabulary-sized relation every BPE
+    round works on (the corpus-sized token stream is touched once, by
+    this rollup)."""
+    d = table(spark, sf_dir, "documents")
+    vocab = (
+        d.select(F.explode(F.split("text", " ")).alias("w"))
+        .groupBy("w")
+        .agg(F.count("*").alias("tf"))
+    )
+    return vocab.select(
+        "w",
+        F.concat_ws("~", F.expr("regexp_extract_all(w, '[^\\n]', 0)")).alias("sym"),
+        "tf",
+    )
+
+
+def _bpe_merge(sym: Column, pair: str) -> Column:
+    """Merge one adjacent-symbol ``pair`` ('a b') in a '~'-joined symbol
+    string: greedy, non-overlapping, left to right (plain string
+    replace — the same semantics as the oracle's replace)."""
+    return F.replace(sym, F.lit(pair.replace(" ", "~")), F.lit(pair.replace(" ", "")))
+
+
+def _bpe_merges(vocab: DataFrame, rounds: int) -> list[tuple[str, int]]:
+    """Greedy BPE training on the fixpoint driver: per round, count the
+    adjacent symbol pairs over the vocabulary (weighted by tf), read the
+    (count desc, pair asc) winner to the driver and merge it. Returns
+    the ``rounds`` winners as (pair, count) in merge order."""
+    merges: list[tuple[str, int]] = []
+
+    def merge_top(cur: DataFrame) -> DataFrame:
+        pairs = cur.select(
+            "tf",
+            F.explode(
+                F.expr(
+                    "CASE WHEN size(split(sym, '~')) >= 2 THEN "
+                    "transform(sequence(1, size(split(sym, '~')) - 1), "
+                    "j -> concat(split(sym, '~')[j-1], ' ', split(sym, '~')[j])) "
+                    "ELSE array() END"
+                )
+            ).alias("pair"),
+        )
+        top = (
+            pairs.groupBy("pair")
+            .agg(F.sum("tf").cast("bigint").alias("n"))
+            .orderBy(F.desc("n"), "pair")
+            .first()
+        )
+        merges.append((top["pair"], top["n"]))
+        return cur.select(_bpe_merge(F.col("sym"), top["pair"]).alias("sym"), "tf")
+
+    iterate(truncate_lineage(vocab.select("sym", "tf")), merge_top, rounds=rounds)
+    return merges
+
+
 def _bpe_oracle(iterations: int = 3) -> str:
     """Unrolled DuckDB twin of q_bpe_train_merges: each iteration picks
     the (count desc, pair asc) top adjacent-symbol pair and merges it
@@ -664,48 +722,10 @@ def _bpe_oracle(iterations: int = 3) -> str:
         "the driver hash-checks the whole iterative computation",
 )
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    vocab = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("tf"))
-    )
-    syms = vocab.select(
-        F.concat_ws("~", F.expr("regexp_extract_all(w, '[^\\n]', 0)")).alias("sym"), "tf"
-    ).cache()
-
-    merges = []
-    cur = syms
-    for it in range(1, 4):
-        pairs = cur.select(
-            "tf",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(split(sym, '~')) >= 2 THEN "
-                    "transform(sequence(1, size(split(sym, '~')) - 1), "
-                    "j -> concat(split(sym, '~')[j-1], ' ', split(sym, '~')[j])) "
-                    "ELSE array() END"
-                )
-            ).alias("pair"),
-        )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("tf").cast("bigint").alias("n"))
-            .orderBy(F.desc("n"), "pair")
-            .first()
-        )
-        merges.append((it, top["pair"], top["n"]))
-        cur = cur.select(
-            F.replace(
-                F.col("sym"),
-                F.lit(top["pair"].replace(" ", "~")),
-                F.lit(top["pair"].replace(" ", "")),
-            ).alias("sym"),
-            "tf",
-        )
-    syms.unpersist()
+    merges = _bpe_merges(_bpe_vocab(spark, sf_dir), rounds=3)
     return spark.createDataFrame(
-        merges, "iteration int, merged_pair string, n bigint"
+        [(it, pair, n) for it, (pair, n) in enumerate(merges, 1)],
+        "iteration int, merged_pair string, n bigint",
     )
 
 
@@ -764,55 +784,13 @@ def _bpe_encode_oracle(iterations: int = 3) -> str:
         "through, so the driver hash-checks the whole loop's end state",
 )
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    vocab = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("tf"))
-    )
-    base = vocab.select(
-        "w",
-        F.concat_ws("~", F.expr("regexp_extract_all(w, '[^\\n]', 0)")).alias("sym"),
-        "tf",
-    )
-    # Merge search runs on a cached copy (3 driver actions over the
-    # vocabulary); the returned frame is rebuilt on fresh lineage from
-    # the collected merge strings so nothing stays pinned in storage.
-    loop = base.cache()
-    cur = loop
-    merges: list[str] = []
-    for _ in range(3):
-        pairs = cur.select(
-            "tf",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(split(sym, '~')) >= 2 THEN "
-                    "transform(sequence(1, size(split(sym, '~')) - 1), "
-                    "j -> concat(split(sym, '~')[j-1], ' ', split(sym, '~')[j])) "
-                    "ELSE array() END"
-                )
-            ).alias("pair"),
-        )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("tf").cast("bigint").alias("n"))
-            .orderBy(F.desc("n"), "pair")
-            .first()
-        )
-        merges.append(top["pair"])
-        cur = cur.select(
-            "w",
-            F.replace(
-                F.col("sym"),
-                F.lit(top["pair"].replace(" ", "~")),
-                F.lit(top["pair"].replace(" ", "")),
-            ).alias("sym"),
-            "tf",
-        )
-    loop.unpersist()
+    # The merge search reads its winners to the driver; the returned
+    # frame is rebuilt on the vocabulary's own lineage from those merge
+    # strings, so it does not hang off the search's truncated states.
+    base = _bpe_vocab(spark, sf_dir)
     sym = F.col("sym")
-    for pair in merges:
-        sym = F.replace(sym, F.lit(pair.replace(" ", "~")), F.lit(pair.replace(" ", "")))
+    for pair, _ in _bpe_merges(base, rounds=3):
+        sym = _bpe_merge(sym, pair)
     return base.select(
         "w",
         "tf",

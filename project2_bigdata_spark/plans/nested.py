@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.datetime_utils import sale_date
-from ..functions.money import dsum, oracle_dsum
+from ..functions.money import oracle_dsum
 from ..operators.pairs import pair_counts, top_pairs_per_product
 from ..operators.salesviews import sales_nested, tickets
 from .registry import register

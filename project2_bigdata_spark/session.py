@@ -73,9 +73,23 @@ def tune(spark: SparkSession) -> SparkSession:
 
 
 def truncate_lineage(df, eager: bool = False):
-    """Truncate a DataFrame's lineage inside iterative/fixpoint loops.
+    """Cut a DataFrame's lineage: plans built on the result start from
+    its materialized rows instead of re-deriving its subtree.
 
-    ``eager`` applies ONLY to the localCheckpoint fallback path. On the
+    Callers use it for two things: the state of a round loop
+    (``operators/fixpoint.iterate`` truncates every round's state), and
+    a subtree that two consumers of one query read, which would
+    otherwise run twice.
+
+    ``eager=False`` is not free at the call. The localCheckpoint path
+    leaves the final stage, the one that stores the rows, to the first
+    action on the result; but under AQE (the production posture) it
+    plans the frame at the call and runs its shuffle-map stages there,
+    so a subtree with an exchange starts jobs before this returns. Only
+    with AQE off does a lazy truncation start no job. ``eager=True``
+    also runs the final stage at the call.
+
+    ``eager`` applies ONLY to the localCheckpoint path. On the
     reliable-checkpoint path (``SPARK_GRAFT_CHECKPOINT_DIR`` set) the
     frame is ALWAYS materialized immediately, regardless of ``eager``:
     a lazy reliable checkpoint would double-compute the subtree (the
@@ -121,9 +135,10 @@ def truncate_lineage(df, eager: bool = False):
         # write checkpoint from cache → drop cache). This wrap applies
         # to BOTH eager modes: a lazy checkpoint(eager=False) would
         # still double-compute (caller's first action + the checkpoint
-        # job), and every production truncate_lineage caller consumes
-        # the frame immediately (fixpoint probes), so materializing now
-        # costs nothing extra and halves the compute (ADVICE r3 item 2).
+        # job). Materializing at the call moves only the final stage
+        # earlier — under AQE the lazy local path already runs the
+        # shuffle-map stages there — and halves the compute (ADVICE r3
+        # item 2).
         # Serialized level: persist()'s default is DESERIALIZED rows,
         # which materialize a whole partition on-heap before eviction
         # (the OOM cliff measured by the scale-stress run on the

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from project2_bigdata_spark.operators.dedup import (
@@ -251,6 +252,74 @@ def test_connected_components_fixpoint(spark):
     )
     got = {r.doc_id: r.cluster_id for r in connected_components(vertices, edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 10: 10, 11: 10, 12: 10, 13: 10, 14: 10}
+
+
+def _chain(spark, n):
+    """Vertices 0..n-1 joined in one path: min-label propagation needs
+    n-1 rounds to move label 0 to the far end, plus one to see no
+    label move."""
+    vertices = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src long, dst long")
+    return vertices, edges
+
+
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """A component whose labels are still moving when the round cap runs
+    out fails loudly: returning the half-propagated labels would give
+    its far end a wrong cluster id."""
+    from project2_bigdata_spark.operators import graph
+
+    monkeypatch.setattr(graph, "MAX_CC_ITERATIONS", 3)
+    got = graph.connected_components(*_chain(spark, 3)).collect()
+    assert {r.cluster_id for r in got} == {0}  # 3 rounds: within the cap
+    with pytest.raises(RuntimeError, match="3 rounds"):
+        graph.connected_components(*_chain(spark, 4))
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_connected_components_runs_no_probe_job(spark, tmp_path, monkeypatch,
+                                                reliable):
+    """Each round's convergence value rides on the job that materializes
+    the round's labels (an Observation on the eager truncation), so no
+    job runs outside the truncations: a separate sum probe would add one
+    or more jobs per round. With SPARK_GRAFT_CHECKPOINT_DIR set, the
+    reliable checkpoint path must fill the Observation too."""
+    import sys
+
+    from project2_bigdata_spark import session
+    from project2_bigdata_spark.operators.graph import connected_components
+
+    if reliable:
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
+    else:
+        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    sc = spark.sparkContext
+    group = f"cc-no-probe-{reliable}"
+    real = session.truncate_lineage
+
+    def truncate(df, eager=False):
+        sc.setJobGroup(f"{group}-mat", "materialization")
+        try:
+            return real(df, eager=eager)
+        finally:
+            sc.setJobGroup(group, group)
+
+    for name, mod in list(sys.modules.items()):
+        if (name.startswith("project2_bigdata_spark.") and mod is not session
+                and getattr(mod, "truncate_lineage", None) is real):
+            monkeypatch.setattr(mod, "truncate_lineage", truncate)
+    vertices, edges = _chain(spark, 6)  # 6 rounds
+    sc.setJobGroup(group, group)
+    try:
+        labels = connected_components(vertices, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup(f"{group}-mat")
+    assert list(tracker.getJobIdsForGroup(group)) == []
+    assert {r.cluster_id for r in labels.collect()} == {0}
 
 
 def test_multimodal_binaryfile_source(spark, tmp_path):

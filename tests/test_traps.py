@@ -834,3 +834,37 @@ def test_money_formulas_live_in_money_py():
     public = {n for n in public if not n.startswith("_")}
     assert public == {"DEC", "safe_div", "dsum", "cents", "cents_to_double",
                       "dec_to_double", "oracle_dsum"}, sorted(public)
+
+
+def test_round_loops_live_in_fixpoint():
+    """One fixpoint driver: a round loop that materializes its state or
+    reads a driver-side value each round lives only in
+    ``operators/fixpoint.py`` (``iterate``). Hand-written copies drift
+    apart: one ran a separate probe job per round, and one stopped at
+    its round cap without saying so. Static scan of the package: no
+    ``for``/``while`` body outside fixpoint.py calls ``truncate_lineage``
+    or ``.first()``. No Spark needed."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "project2_bigdata_spark"
+
+    def round_call(node):
+        return isinstance(node, ast.Call) and (
+            (isinstance(node.func, ast.Name)
+             and node.func.id == "truncate_lineage")
+            or (isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("truncate_lineage", "first")))
+
+    loops = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        if rel == "operators/fixpoint.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, (ast.For, ast.While)) and any(
+                    round_call(n) for stmt in node.body
+                    for n in ast.walk(stmt)):
+                loops.append(f"{rel}:{node.lineno}")
+    assert loops == [], loops
