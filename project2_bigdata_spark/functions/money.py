@@ -4,10 +4,27 @@ The reference sums Decimal128 prices after an early float cast
 (SURVEY.md §2.11 quirk 5), which makes its checksum order-dependent.
 We instead sum exactly (BIGINT cents, or DECIMAL for wider scales —
 order-insensitive, safe under any partitioning / AQE re-plan) and turn
-the *result* into a double through a string round-trip, so the value is
-bit-identical between Spark and the DuckDB oracle no matter how rows
-are partitioned. At 100 TB this also means the checksum is stable
-across reruns, which float summation is not.
+only the exact *result* into a double, rounded once and correctly, so
+the value is bit-identical between Spark and the DuckDB oracle (which
+spells the same rounding as a decimal→string→double round-trip) no
+matter how rows are partitioned. At 100 TB this also means the
+checksum is stable across reruns, which float summation is not.
+
+Both conversions are single correctly-rounded steps, so neither needs
+the string round-trip on the Spark side:
+
+* cents → double (:func:`cents_to_double`): for |S| < 2^53 the long S
+  converts to a double exactly and 100.0 is exact, and IEEE 754
+  division is correctly rounded — ``double(S) / 100.0`` IS the nearest
+  double to the exact rational S/100. Wider sums keep the exact decimal
+  path.
+* decimal → double (:func:`dec_to_double`): Spark's ``Decimal.toDouble``
+  is ``toBigDecimal.doubleValue`` (Spark 4.1), and JDK 17's
+  ``BigDecimal.doubleValue`` is correctly rounded, so a plain cast
+  equals the nearest double to the exact decimal value.
+  ``tests/test_money.py`` pins both against the spelled-out string path
+  and against Python's correctly rounded integer division, so a Spark
+  or JDK upgrade that changes either fails loudly.
 
 Every money formula lives here: :func:`dsum` is the aggregate entry
 point and :func:`oracle_dsum` its DuckDB twin; :func:`cents` and
@@ -27,15 +44,18 @@ DEC = "decimal(18,2)"
 
 
 def dec_to_double(c: Column) -> Column:
-    """Decimal → double via a string round-trip.
+    """Decimal → the nearest double to its exact value.
 
-    Direct decimal→double conversion is NOT correctly rounded identically
-    across engines (observed 1-ULP drift between Spark's BigDecimal path
-    and DuckDB's int128/10^s path). decimal→string is exact digits and
-    string→double is correctly rounded in both JVMs and DuckDB, so this
-    path is bit-deterministic everywhere.
+    A plain cast: ``Decimal.toDouble`` is ``BigDecimal.doubleValue``,
+    correctly rounded on JDK 17, so it equals the string round-trip the
+    oracle spells (decimal→string is exact digits, string→double is
+    correctly rounded) for every DECIMAL input — without the per-row
+    string formatting and parsing. The 1-ULP drift that once motivated
+    the round-trip was DuckDB's int128/10^s conversion, which is why
+    :func:`oracle_dsum` keeps it on the DuckDB side. DECIMAL inputs
+    only: a FLOAT's cast differs from its string round-trip.
     """
-    return c.cast("string").cast("double")
+    return c.cast("double")
 
 
 def cents(c: Column) -> Column:
@@ -45,14 +65,21 @@ def cents(c: Column) -> Column:
 
 
 def cents_to_double(s: Column) -> Column:
-    """BIGINT cent sum → the same double the decimal path produced.
+    """BIGINT cent sum → the nearest double to the exact S/100.
 
-    The cent sum is widened to decimal BEFORE the /100 so the exact
-    rational S/100 goes through the same string→double correct rounding
-    as the decimal path — ``double(S)/100.0`` would round twice and can
-    drift 1 ULP once S exceeds 2^53 (≈ 9e13 money units).
+    Below 2^53 both ``double(S)`` and 100.0 are exact, so the one IEEE
+    division rounds the exact quotient once — the same double the
+    string→double conversion of the exact decimal S/100 gives. From
+    2^53 on ``double(S)`` itself may round (a second rounding could
+    drift 1 ULP), so those sums (≈ 9e13 money units and up) go through
+    the exact decimal S/100 instead. Rounding is monotonic and 2^53 is
+    a double, so |double(S)| < 2^53 exactly when |S| < 2^53; the test
+    takes ``abs`` of the double, never of the long, because under ANSI
+    mode ``abs(Long.MIN_VALUE)`` raises.
     """
-    return dec_to_double(s.cast("decimal(38,2)") / F.lit(100))
+    d = s.cast("double")
+    return F.when(F.abs(d) < 2 ** 53, d / F.lit(100.0)).otherwise(
+        dec_to_double(s.cast("decimal(38,2)") / F.lit(100)))
 
 
 def dsum(x: Column | str, alias: str | None = None, *,

@@ -7,10 +7,19 @@ sale, every 2-combination of the SORTED, NON-DEDUPLICATED item-name list
 
 Spark-first design: the reference materializes every sale client-side and
 loops with itertools.combinations. Here the combinations are generated
-INSIDE each row with higher-order array functions (transform + slice +
-flatten) — no self-join, no extra shuffle; the only shuffle is the final
-groupBy(product_1, product_2), whose cardinality is bounded by
+INSIDE each row — no self-join, no extra shuffle; the only shuffle is the
+final groupBy(product_1, product_2), whose cardinality is bounded by
 |products|², not by data size. This is the plan that survives 100 TB.
+
+The row-local expansion is one generator per combination level:
+``posexplode`` yields each name x with its position i, then
+``explode(slice(names, i + 2, size))`` yields every later name y — the
+(i, j>i) pairs, positions not values, so duplicates and self-pairs keep
+their multiplicity exactly as itertools.combinations does (triples add
+one more level). Generators over plain arrays and ``slice`` run inside
+whole-stage codegen; the equivalent ``flatten(transform(...))`` lambdas
+have no generated code (``CodegenFallback``) and are interpreted
+element by element.
 """
 
 from __future__ import annotations
@@ -20,13 +29,15 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 
-# All (i, j>i) pairs of the sorted name array, generated row-local.
-_PAIRS_EXPR = """
-flatten(
-  transform(item_names, (x, i) ->
-    transform(slice(item_names, i + 2, size(item_names)), y ->
-      struct(x AS product_1, y AS product_2))))
-"""
+def pairs_of(df: DataFrame) -> DataFrame:
+    """All (i, j>i) pairs of the array column ``item_names``, one row
+    each as ``product_1``, ``product_2`` (other columns are dropped)."""
+    return (
+        df.selectExpr("posexplode(item_names) AS (_i, product_1)",
+                      "item_names")
+        .selectExpr("product_1", "explode(slice(item_names, _i + 2, "
+                                 "size(item_names))) AS product_2")
+    )
 
 
 def pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -43,7 +54,7 @@ def pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = table(spark, sf_dir, "orders").agg(
         F.count("*").cast("double").alias("_total_sales")
     )
-    pairs = (
+    baskets = (
         lineitem
         .join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
         .groupBy("l_orderkey")
@@ -51,8 +62,10 @@ def pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # for every generated pair (matches the reference's sorted() call,
         # dashboard.py:209).
         .agg(F.array_sort(F.collect_list("p_name")).alias("item_names"))
-        .select(F.explode(F.expr(_PAIRS_EXPR)).alias("pair"))
-        .groupBy("pair.product_1", "pair.product_2")
+    )
+    pairs = (
+        pairs_of(baskets)
+        .groupBy("product_1", "product_2")
         .agg(F.count("*").alias("pair_count"))
     )
     return (
@@ -80,21 +93,24 @@ def top_pairs_per_product(spark: SparkSession, sf_dir: str, k: int = 10) -> Data
     )
 
 
-#: All (i, j>i, k>j) triples of the sorted DISTINCT name array,
-#: generated row-local (no self-joins anywhere on the Spark side).
-_TRIPLES_EXPR = """
-flatten(transform(names, (x, i) ->
-  flatten(transform(slice(names, i + 2, size(names)), (y, j) ->
-    transform(slice(names, i + j + 3, size(names)), z ->
-      struct(x AS a, y AS b, z AS c))))))
-"""
+def triples_of(df: DataFrame) -> DataFrame:
+    """All (i, j>i, k>j) triples of the array column ``names``, one row
+    each as ``a``, ``b``, ``c`` (other columns are dropped). b sits at
+    position i + 1 + j, so c's slice starts one past it."""
+    return (
+        df.selectExpr("posexplode(names) AS (_i, a)", "names")
+        .selectExpr("a", "_i", "names",
+                    "posexplode(slice(names, _i + 2, size(names))) AS (_j, b)")
+        .selectExpr("a", "b",
+                    "explode(slice(names, _i + _j + 3, size(names))) AS c")
+    )
 
 
 def triple_counts_topk(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
     """Top-K most frequent 3-itemsets (distinct per-basket products,
     a<b<c canonical order) — the next market-basket order above A8's
-    pairs. Triples are generated ROW-LOCALLY by nested
-    transform+slice (C(|basket|,3) per row, baskets are small); the
+    pairs. Triples are generated ROW-LOCALLY by :func:`triples_of`
+    (C(|basket|,3) per row, baskets are small); the
     only shuffle is the triple rollup, bounded by |products|^3 —
     independent of order volume. Deterministic (count desc, a, b, c)
     rank; the K winners come from a distributed sort+limit
@@ -106,12 +122,14 @@ def triple_counts_topk(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFra
 
     lineitem = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part").select("p_partkey", "p_name")
-    triples = (
+    baskets = (
         lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.array_distinct(F.collect_list("p_name"))).alias("names"))
-        .select(F.explode(F.expr(_TRIPLES_EXPR)).alias("t"))
-        .groupBy("t.a", "t.b", "t.c")
+    )
+    triples = (
+        triples_of(baskets)
+        .groupBy("a", "b", "c")
         .agg(F.count("*").cast("bigint").alias("n_baskets"))
     )
     order = [

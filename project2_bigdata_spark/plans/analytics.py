@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..functions.money import (
-    DEC, cents, cents_to_double, dec_to_double, dsum, oracle_dsum,
+    cents, cents_to_double, dec_to_double, dsum, oracle_dsum,
 )
 from ..operators.rank import global_ntile
 from ..operators.salesviews import sale_lines
@@ -210,16 +210,14 @@ def q_gap_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = F.datediff("d", "date").cast("long")
     n = F.datediff("next_d", "date").cast("long")
-    prev_c = F.round(F.col("total_revenue") * 100).cast("long")
-    next_c = F.round(F.col("next_rev") * 100).cast("long")
+    prev_c = cents(F.col("total_revenue"))
+    next_c = cents(F.col("next_rev"))
     staged = exploded.select(
         "product", "date", "total_revenue", "d",
         (prev_c * (n - k) + next_c * k).alias("num_c"),
         n.alias("n_days"),
     )
-    interp = (
-        F.expr("num_c div n_days").cast("double") / F.lit(100.0)
-    )
+    interp = cents_to_double(F.expr("num_c div n_days"))
     return staged.select(
         "product",
         F.date_format("d", "yyyy-MM-dd").alias("date"),
@@ -2603,7 +2601,7 @@ def q_concentration_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "outlier queries (mad_outliers, seasonal_anomalies) which only "
         "see individually-extreme days. Exactness: cusum_t = "
         "Σ_{{s<=t}}(x_s − μ) = (n·prefix_t − t·total)/n is computed as "
-        "EXACT BIGINT cents in the numerator (decimal running sum ×100; "
+        "EXACT BIGINT cents in the numerator (running cent sum; "
         "n·prefix − t·total never touches a float), with ONE double "
         "division at the end — a windowed float cumsum would make the "
         "result accumulation-order-dependent and engine-divergent, and "
@@ -2626,14 +2624,12 @@ def q_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcum = wseq.rowsBetween(Window.unboundedPreceding, 0)
     cum = daily.select(
         "product", "date",
-        (F.sum(F.col("total_revenue").cast(DEC)).over(wcum) * 100)
-        .cast("bigint").alias("cum_c"),
+        F.sum(cents(F.col("total_revenue"))).over(wcum).alias("cum_c"),
         F.row_number().over(wseq).cast("bigint").alias("t"),
     )
     tot = daily.groupBy("product").agg(
         F.count("*").alias("n"),
-        (F.sum(F.col("total_revenue").cast(DEC)) * 100)
-        .cast("bigint").alias("tot_c"),
+        F.sum(cents(F.col("total_revenue"))).alias("tot_c"),
         dsum("total_revenue", "sx"),
         dsum("total_revenue * total_revenue", "sxx", dec="decimal(28,10)"),
     )

@@ -2395,7 +2395,7 @@ def _det3(a, b, c, d, e, f, g, h, i) -> str:
 #: [sw,stw,sww]]; D_k replaces column k with the y-moment vector
 #: (sy, sty, swy). Coefficients b_k = D_k / D divide ONCE, as doubles
 #: obtained from the exact decimals via the canonical string
-#: round-trip (decimal→double direct is 1-ULP engine-divergent).
+#: round-trip (DuckDB's direct decimal→double can be 1 ULP off).
 _OLS2_D = _det3("n", "st", "sw", "st", "stt", "stw", "sw", "stw", "sww")
 _OLS2_D0 = _det3("sy", "st", "sw", "sty", "stt", "stw", "swy", "stw", "sww")
 _OLS2_D1 = _det3("n", "sy", "sw", "st", "sty", "stw", "sw", "swy", "sww")
@@ -3248,8 +3248,7 @@ def _anova_final(st: str) -> list[str]:
 )
 def q_anova_f_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
-    price_c = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast(
-        "decimal(18,0)")
+    price_c = cents(F.col("o_totalprice")).cast("decimal(18,0)")
     aggs = [
         F.count("*").cast("bigint").alias("n"),
         F.sum(price_c).alias("s"),
@@ -3339,8 +3338,7 @@ _PSI_BUCKETS = 10
 def q_psi_drift_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     v = o.select(
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.when(F.col("o_orderdate").cast("date")
                < F.lit(_PSI_SPLIT).cast("date"), 0).otherwise(1).alias("win"),
     )
@@ -3445,8 +3443,7 @@ def q_target_encode_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("category"),
         (F.expr("conv(substr(md5(cast(o_orderkey as string)), 1, 8), 16, 10)")
          .cast("bigint") % _TE_FOLDS).cast("int").alias("fold"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint").alias("y"),
+        cents(F.col("o_totalprice")).alias("y"),
     )
     cf = r.groupBy("category", "fold").agg(
         F.count("*").cast("bigint").alias("n_cf"),

@@ -961,14 +961,17 @@ def _stage(path: str, version: int, df: DataFrame | None = None,
     written into it (partitioned by ``partition_by``), or an empty dir
     for a commit assembled from hardlinks alone. An unpublished staging
     dir is invisible to readers and reclaimed by
-    :func:`vacuum_versions`."""
+    :func:`vacuum_versions`. The job writes no ``_SUCCESS`` of its own:
+    :func:`_publish` marks the commit, and the job's marker would only
+    cost a file, its ``.crc`` and their permission calls per write."""
     import uuid
 
     staging = os.path.join(path, f".staged-v{version}-{uuid.uuid4().hex}")
     if df is None:
         os.makedirs(staging)
         return staging
-    w = df.write.mode("errorifexists")
+    w = (df.write.mode("errorifexists")
+         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"))
     if partition_by:
         w = w.partitionBy(partition_by)
     w.parquet(staging)

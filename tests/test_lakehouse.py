@@ -134,3 +134,26 @@ def test_write_versioned_publishes_through_the_seam(spark, tmp_path):
     assert not os.path.exists(f"{p}/v=2/_commit_ts")
     assert [r.operation for r in table_history(spark, p).collect()] == [
         "WRITE", "WRITE"]
+
+
+def test_commit_marker_comes_from_the_seam(spark, tmp_path):
+    """The staging write job leaves no ``_SUCCESS`` (nor its ``.crc``)
+    of its own; the publish seam writes the one marker, so a committed
+    ``v=N`` still carries ``_SUCCESS`` and readers still see it."""
+    from project2_bigdata_spark.sources.ingest import (
+        _stage, read_version, write_versioned,
+    )
+
+    df = _kv(spark, [(1, 1, "a"), (2, 2, "b")])
+    staging = _stage(str(tmp_path / "s"), 1, df)
+    names = os.listdir(staging)
+    assert any(n.endswith(".parquet") for n in names), names
+    assert "_SUCCESS" not in names and "._SUCCESS.crc" not in names, names
+
+    p = str(tmp_path / "t")
+    assert write_versioned(df, p) == 1
+    assert write_versioned(df, p) == 2
+    for v in (1, 2):
+        assert os.path.exists(f"{p}/v={v}/_SUCCESS"), v
+        assert sorted(r.k for r in read_version(spark, p, v).collect()) == [
+            1, 2]

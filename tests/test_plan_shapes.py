@@ -1568,3 +1568,17 @@ def test_heavy_hitters_cms_grid_bounded_shuffle(spark, sf_dir):
     assert plan.count("BroadcastNestedLoopJoin") == 3, plan
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+@pytest.mark.parametrize("name", [
+    "pair_counts", "top_pairs_per_product", "association_rules",
+    "triple_counts_topk",
+])
+def test_basket_combinations_have_no_lambdas(executed_plan, name):
+    """The market-basket pair and triple expansions are plain generators
+    (posexplode, then explode over a slice) that whole-stage codegen
+    compiles. A higher-order-function lambda (transform/flatten) has no
+    generated code and is interpreted element by element."""
+    plan = executed_plan(name)
+    assert "Generate" in plan, f"{name}: no generator in\n{plan}"
+    assert "lambdafunction" not in plan, f"{name}:\n{plan}"

@@ -88,19 +88,37 @@ def test_lag_never_leaks_across_partitions(spark, rows):
 @settings(**_SETTINGS)
 @given(_sales)
 def test_pair_mining_matches_itertools(spark, sales):
-    """A8 invariant: the row-local higher-order-function pair expansion
-    equals itertools.combinations over the sorted, NON-deduplicated name
-    list (multiplicity + self-pairs, the reference's exact semantics)."""
-    from project2_bigdata_spark.operators.pairs import _PAIRS_EXPR
+    """A8 invariant: the row-local generator pair expansion equals
+    itertools.combinations over the sorted, NON-deduplicated name list
+    (multiplicity + self-pairs, the reference's exact semantics)."""
+    from project2_bigdata_spark.operators.pairs import pairs_of
 
     rows = [(i, sorted(n for (n, _, _) in its)) for i, its in enumerate(sales)]
     df = spark.createDataFrame(rows, "sale_id int, item_names array<string>")
-    got = Counter(
-        (r.pair.product_1, r.pair.product_2)
-        for r in df.select(F.explode(F.expr(_PAIRS_EXPR)).alias("pair")).collect()
-    )
+    got = Counter((r.product_1, r.product_2) for r in pairs_of(df).collect())
     want = Counter(
         pair for _, names in rows for pair in itertools.combinations(names, 2)
+    )
+    assert got == want
+
+
+@settings(**_SETTINGS)
+@given(st.lists(
+    st.lists(st.sampled_from(["a", "b", "c", "d", "e", "f"]),
+             max_size=6, unique=True),
+    min_size=1, max_size=6,
+))
+def test_triple_mining_matches_itertools(spark, baskets):
+    """The row-local triple expansion (one generator per level) equals
+    itertools.combinations(…, 3) over each basket's distinct, sorted
+    names — including baskets too small to hold a triple."""
+    from project2_bigdata_spark.operators.pairs import triples_of
+
+    rows = [(i, sorted(b)) for i, b in enumerate(baskets)]
+    df = spark.createDataFrame(rows, "sale_id int, names array<string>")
+    got = Counter((r.a, r.b, r.c) for r in triples_of(df).collect())
+    want = Counter(
+        t for _, names in rows for t in itertools.combinations(names, 3)
     )
     assert got == want
 

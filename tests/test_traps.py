@@ -15,7 +15,7 @@ from pyspark.sql import Row, functions as F
 from project2_bigdata_spark.functions.datetime_utils import (
     is_weekend, pandas_weekday, week_start,
 )
-from project2_bigdata_spark.operators.pairs import _PAIRS_EXPR
+from project2_bigdata_spark.operators.pairs import pairs_of
 
 
 def test_weekday_pandas_parity(spark):
@@ -43,8 +43,7 @@ def test_pair_multiplicity_and_self_pairs(spark):
     # [notepad, notepad, pens] → (notepad,notepad)×1, (notepad,pens)×2
     df = spark.createDataFrame([Row(item_names=["notepad", "notepad", "pens"])])
     pairs = (
-        df.select(F.explode(F.expr(_PAIRS_EXPR)).alias("p"))
-        .groupBy("p.product_1", "p.product_2").count()
+        pairs_of(df).groupBy("product_1", "product_2").count()
     )
     got = {(r.product_1, r.product_2): r["count"] for r in pairs.collect()}
     assert got == {("notepad", "notepad"): 1, ("notepad", "pens"): 2}
@@ -786,7 +785,7 @@ def test_one_lakehouse_publish_seam():
 
 def test_money_formulas_live_in_money_py():
     """One way to sum money: the exact-sum policy (BIGINT cents or
-    decimal, then decimal→double through a string round-trip) is spelled
+    decimal, then one correctly rounded step to double) is spelled
     only in ``functions/money.py``. A copy elsewhere drifts from it, as
     the five hand-copied ``dsum`` bodies and local re-derivations once
     did. Static scan of the package, money.py excluded: no inline
